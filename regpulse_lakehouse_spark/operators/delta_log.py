@@ -158,6 +158,8 @@ class DeltaLogTable:
         #: partition spec for a table THIS handle creates; an existing
         #: table's metaData always wins (validated on first write)
         self._init_partition_cols = list(partition_columns or [])
+        #: parsed actions per committed version (see :meth:`_actions`)
+        self._parsed: dict[int, list[dict]] = {}
         os.makedirs(os.path.join(root, _LOG_DIR), exist_ok=True)
 
     # -- log plumbing --------------------------------------------------------
@@ -171,6 +173,20 @@ class DeltaLogTable:
             if ext == ".json" and stem.isdigit():
                 out.append(int(stem))
         return sorted(out)
+
+    def _actions(self, version: int) -> list[dict]:
+        """The parsed actions of commit ``version``. A committed JSON
+        never changes (commits are put-if-absent, and nothing rewrites
+        or deletes a log JSON), so each is parsed once per handle: the
+        five or six replays of one write op otherwise re-parse every
+        commit since the last checkpoint. Callers must not mutate the
+        returned actions. A missing version raises FileNotFoundError."""
+        actions = self._parsed.get(version)
+        if actions is None:
+            with open(self._log_path(version), encoding="utf-8") as fh:
+                actions = [json.loads(line) for line in fh if line.strip()]
+            self._parsed[version] = actions
+        return actions
 
     @property
     def version(self) -> int | None:
@@ -223,18 +239,14 @@ class DeltaLogTable:
             cp_version, active, meta, tombstones, _proto = cp
             versions = [v for v in versions if v > cp_version]
         for v in versions:
-            with open(self._log_path(v), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action:
-                        active[action["add"]["path"]] = action["add"]
-                    elif "remove" in action:
-                        active.pop(action["remove"]["path"], None)
-                        tombstones[action["remove"]["path"]] = action["remove"]
-                    elif "metaData" in action:
-                        meta = action["metaData"]
+            for action in self._actions(v):
+                if "add" in action:
+                    active[action["add"]["path"]] = action["add"]
+                elif "remove" in action:
+                    active.pop(action["remove"]["path"], None)
+                    tombstones[action["remove"]["path"]] = action["remove"]
+                elif "metaData" in action:
+                    meta = action["metaData"]
         return active, meta, tombstones
 
     # -- checkpoints ---------------------------------------------------------
@@ -497,12 +509,9 @@ class DeltaLogTable:
         for v in reversed(versions):
             if v <= floor:
                 break
-            with open(self._log_path(v), encoding="utf-8") as fh:
-                for line in fh:
-                    if line.strip():
-                        action = json.loads(line)
-                        if "protocol" in action:
-                            return action["protocol"]
+            for action in self._actions(v):
+                if "protocol" in action:
+                    return action["protocol"]
         return default
 
     def partition_columns(self) -> list[str]:
@@ -650,13 +659,9 @@ class DeltaLogTable:
         best = None
         for v in self._committed_versions():
             ts = None
-            with open(self._log_path(v), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "commitInfo" in action:
-                        ts = action["commitInfo"].get("timestamp")
+            for action in self._actions(v):
+                if "commitInfo" in action:
+                    ts = action["commitInfo"].get("timestamp")
             if ts is None:
                 ts = int(os.path.getmtime(self._log_path(v)) * 1000)
             if ts <= timestamp_ms:
@@ -674,7 +679,8 @@ class DeltaLogTable:
 
     def active_files(self, version: int | None = None) -> list[dict]:
         """The snapshot's add-actions (path, size, stats) — the
-        data-skipping surface a planner prunes on."""
+        data-skipping surface a planner prunes on. The dicts are the
+        handle's parsed log actions: read them, do not mutate them."""
         active, _, _ = self._replay(version)
         return [active[p] for p in sorted(active)]
 
@@ -900,14 +906,10 @@ class DeltaLogTable:
 
         for won in range(read_v + 1, head + 1):
             try:
-                with open(self._log_path(won), encoding="utf-8") as fh:
-                    lines = fh.readlines()
+                actions = self._actions(won)
             except FileNotFoundError:
                 continue  # gap: racer between listdir and open
-            for line in lines:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
+            for action in actions:
                 if "metaData" in action or "protocol" in action:
                     raise ValueError(
                         f"concurrent metadata change at version {won} of "
@@ -1200,17 +1202,13 @@ class DeltaLogTable:
         for v in self._committed_versions():
             if v <= from_version or v > to_v:
                 continue
-            with open(self._log_path(v), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action:
-                        window_adds.append(action["add"]["path"])
-                    elif "commitInfo" in action:
-                        pass
-                    else:  # remove / metaData / protocol
-                        add_only = False
+            for action in self._actions(v):
+                if "add" in action:
+                    window_adds.append(action["add"]["path"])
+                elif "commitInfo" in action:
+                    pass
+                else:  # remove / metaData / protocol
+                    add_only = False
             if not add_only:
                 break
         if add_only:
@@ -1505,20 +1503,16 @@ class DeltaLogTable:
         removed_at: dict[str, int] = {}
         removed_ts: dict[str, int] = {}
         for v in self._committed_versions():
-            with open(self._log_path(v), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action:
-                        active_paths.add(action["add"]["path"])
-                    elif "remove" in action:
-                        p = action["remove"]["path"]
-                        active_paths.discard(p)
-                        removed_at[p] = v
-                        removed_ts[p] = action["remove"].get(
-                            "deletionTimestamp"
-                        ) or 0
+            for action in self._actions(v):
+                if "add" in action:
+                    active_paths.add(action["add"]["path"])
+                elif "remove" in action:
+                    p = action["remove"]["path"]
+                    active_paths.discard(p)
+                    removed_at[p] = v
+                    removed_ts[p] = action["remove"].get(
+                        "deletionTimestamp"
+                    ) or 0
         doomed = []
         for p in sorted(removed_ts):
             if p in active_paths or removed_ts[p] >= cutoff:

@@ -529,32 +529,16 @@ def bm25_index_compact(spark: SparkSession, path: str) -> int:
         # stats) — pin it once; the fold path consumes it exactly once
         # and needs no pin
         post = post.localCheckpoint()
-        if post.isEmpty():
-            # every doc tombstoned: a partitioned write of zero rows
-            # leaves only _SUCCESS and bricks schema inference on the
-            # next search, so write a schema-bearing empty file into an
-            # explicit tb=0 leaf — partition layout stays consistent
-            # with future appends
-            post.drop("tb").coalesce(1).write.parquet(
-                f"{tmp}/postings/batch=1/tb=0"
-            )
-        else:
-            post.repartition("tb").write.partitionBy("tb").parquet(
-                f"{tmp}/postings/batch=1"
-            )
-    else:
-        post.repartition("tb").write.partitionBy("tb").parquet(f"{tmp}/postings/batch=1")
+    _write_buckets(post, f"{tmp}/postings/batch=1")
     meta = spark.read.parquet(f"{path}/_meta").filter(F.col("batch").isin(blist)).collect()
     if dels is None:
         # pure fold: exact, including token-less documents
-        (
+        _write_buckets(
             spark.read.parquet(f"{path}/df")
             .filter(F.col("batch").isin(blist))
             .groupBy("tb", "term")
-            .agg(F.sum("df").alias("df"))
-            .repartition("tb")
-            .write.partitionBy("tb")
-            .parquet(f"{tmp}/df/batch=1")
+            .agg(F.sum("df").alias("df")),
+            f"{tmp}/df/batch=1",
         )
         n_total = sum(int(r["n_docs"]) for r in meta)
         avgdl = (
@@ -564,13 +548,10 @@ def bm25_index_compact(spark: SparkSession, path: str) -> int:
         )
     else:
         # purge path: recompute df and stats from surviving postings
-        df_frame = post.groupBy("tb", "term").agg(F.count_distinct(id_col).alias("df"))
-        if post.isEmpty():
-            df_frame.drop("tb").coalesce(1).write.parquet(f"{tmp}/df/batch=1/tb=0")
-        else:
-            df_frame.repartition("tb").write.partitionBy("tb").parquet(
-                f"{tmp}/df/batch=1"
-            )
+        _write_buckets(
+            post.groupBy("tb", "term").agg(F.count_distinct(id_col).alias("df")),
+            f"{tmp}/df/batch=1",
+        )
         stats = post.select(id_col, "dl").distinct().agg(
             F.count("*").alias("n"), F.avg("dl").alias("a")
         ).first()
@@ -589,24 +570,35 @@ def bm25_index_compact(spark: SparkSession, path: str) -> int:
     return len(blist) + len(del_blist)
 
 
+def _write_buckets(frame: DataFrame, dest: str) -> None:
+    """Write ``frame`` under ``dest`` partitioned by ``tb``, one file
+    per bucket dir (the small-files guard). A partitioned write of zero
+    rows leaves only _SUCCESS, and an index whose committed batches
+    hold no file at all cannot infer a schema at search time — so an
+    empty frame instead writes one schema-bearing empty file into an
+    explicit tb=0 leaf, keeping the partition layout of later batches."""
+    frame.repartition("tb").write.mode("overwrite").partitionBy("tb").parquet(dest)
+    jvm, fs, P = _fs(frame.sparkSession, dest)
+    if not fs.globStatus(P(f"{dest}/tb=*")):
+        frame.drop("tb").coalesce(1).write.mode("overwrite").parquet(f"{dest}/tb=0")
+
+
 def _write_batch(
     docs: DataFrame, path: str, text_col: str, id_col: str, n_buckets: int, b: int
 ) -> None:
+    # the batch is evaluated once: the postings below and corpus_stats
+    # both read these blocks (an append's batch is typically an
+    # anti-join against the main table, which would otherwise run twice)
+    docs = docs.select(id_col, text_col).localCheckpoint(eager=False)
     post = (
         postings(docs, text_col, id_col)
         .withColumn("tb", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
         .localCheckpoint()  # computed once; reused by the postings write AND the df agg
     )
-    post.repartition("tb").write.mode("overwrite").partitionBy("tb").parquet(
-        f"{path}/postings/batch={b}"
-    )
-    (
-        post.groupBy("tb", "term")
-        .agg(F.count_distinct(id_col).alias("df"))
-        .repartition("tb")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(f"{path}/df/batch={b}")
+    _write_buckets(post, f"{path}/postings/batch={b}")
+    _write_buckets(
+        post.groupBy("tb", "term").agg(F.count_distinct(id_col).alias("df")),
+        f"{path}/df/batch={b}",
     )
     n_docs, avgdl = corpus_stats(docs, text_col)
     docs.sparkSession.createDataFrame(

@@ -14,6 +14,25 @@ boundaries; here they are a single DataFrame DAG per run:
 
 The only Python stage is the pluggable extractor (and only in its
 ``mapInPandas`` flavor); everything else is codegen'd columnar work.
+
+One materialization per run: the DAG is planned lazily, but two frames
+are ``localCheckpoint``-ed (lazily, so no extra action) — the windowed,
+capped, tier-annotated ``docs`` and the validated, ``routed`` items.
+All five outputs are derived from those two leaves, so whichever sink
+action runs first computes W1, T5 and the extract⋈docs join (and calls
+the extractor) once; every later action — summary collect, MERGE key
+bounds and stage write, review append, link union, near-dup signatures,
+index postings — reads the pinned blocks. It also makes the outputs of
+one run mutually consistent even when the extractor is not
+deterministic. The blocks live in executor storage as long as any
+output frame references them: once the ``ScanResult`` and every frame
+derived from it are unreachable, Spark's ContextCleaner frees them
+after the next JVM garbage collection, so a streaming caller that runs
+one scan per micro-batch does not accumulate them. As with any
+``localCheckpoint``,
+a lost executor loses blocks that cannot be recomputed: the run fails,
+and a restarted ``stream_scan`` query replays that micro-batch from its
+checkpoint.
 """
 
 from __future__ import annotations
@@ -31,7 +50,11 @@ from .extract import ColumnExtractor, Extractor
 
 @dataclass
 class ScanResult:
-    """The scan run's output tables (all lazy DataFrames)."""
+    """The scan run's output tables. Each is a lazy plan over the run's
+    two pinned leaves (``docs`` and ``routed``, see the module
+    docstring): no output re-runs the dedup window, the cap or the
+    extractor, and the pinned blocks are freed once the result and the
+    frames derived from it are garbage-collected."""
 
     documents: DataFrame  # deduped, windowed, policy-annotated candidates
     main_items: DataFrame  # validated TIER_A items → upsert into main
@@ -93,7 +116,9 @@ def run_scan(
         ],
         F.lit("TIER_D_QUARANTINE"),  # F9 default (policy.ts:163-170)
     )
-    docs = docs.withColumn("trust_tier", tier_expr)
+    # Materialization 1 of 2: every output reads the deduped, capped
+    # candidates from these blocks instead of re-planning W1 and T5.
+    docs = docs.withColumn("trust_tier", tier_expr).localCheckpoint(eager=False)
 
     extracted = extractor.extract(docs)
     items = (
@@ -125,7 +150,9 @@ def run_scan(
             ),
         )
     )
-    routed = with_route(with_validation(normalize_items(items)))
+    # Materialization 2 of 2: the extractor runs and the extract⋈docs
+    # join shuffles once per run, whichever sink reads first.
+    routed = with_route(with_validation(normalize_items(items))).localCheckpoint(eager=False)
     main_items, review_items = split_routes(routed)
 
     # G5 link derivation (jobs/scan.ts:107-167): per-relation projections.

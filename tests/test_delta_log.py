@@ -1003,3 +1003,27 @@ def test_concurrent_deletes_disjoint_files_rebase(spark, tmp_path):
     _race(t3, lambda: t2.delete_where((F.col("grp") == "g2") & (F.col("id") == 2)))
     with pytest.raises(ValueError, match="concurrent"):
         t3.delete_where((F.col("grp") == "g2") & (F.col("id") == 5), max_retries=1)
+
+
+def test_write_op_parses_each_commit_once(spark, tmp_path, monkeypatch):
+    """A MERGE replays the log several times (schema check, key bounds,
+    touched files, commit); each commit JSON is parsed at most once per
+    handle, since committed JSONs never change."""
+    from regpulse_lakehouse_spark.operators import delta_log as DL
+
+    root = str(tmp_path / "t")
+    t = DeltaLogTable(spark, root, checkpoint_interval=None)
+    for i in range(4):
+        t.append(spark.createDataFrame([(i, f"v{i}", 0)], "id long, val string, ver int").coalesce(1))
+    opened: list[str] = []
+
+    def counting_open(path, *a, **k):
+        opened.append(os.path.basename(str(path)))
+        return open(path, *a, **k)
+
+    monkeypatch.setattr(DL, "open", counting_open, raising=False)
+    fresh = DeltaLogTable(spark, root, checkpoint_interval=None)
+    fresh.upsert(spark.createDataFrame([(2, "new", 1)], "id long, val string, ver int"), ["id"], "ver")
+    logs = [n for n in opened if n.endswith(".json")]
+    assert sorted(logs) == [f"{v:020d}.json" for v in range(4)]
+    assert _rows(fresh.read()) == [(0, "v0", 0), (1, "v1", 0), (2, "new", 1), (3, "v3", 0)]

@@ -201,6 +201,24 @@ def test_index_append_equals_fresh_build(spark, tmp_path):
         assert a == f == o, query
 
 
+def test_search_over_empty_build_then_append(spark, tmp_path):
+    """An index built from an empty frame (an ingest's set-up, before
+    its first batch) serves 0 hits instead of failing schema inference;
+    after one append the same search returns that batch's ids."""
+    path = str(tmp_path / "idx")
+    schema = "doc_id string, text string"
+    R.write_bm25_index(spark.createDataFrame([], schema), path, n_buckets=4)
+    assert R.bm25_search(spark, path, "quick fox", k=5).count() == 0
+    assert R.bm25_search(spark, path, " ", k=5).schema["doc_id"].dataType.simpleString() == "string"
+    batch = spark.createDataFrame(CORPUS[:2] + [("d00", "   ")], schema)
+    R.bm25_index_append(batch, path, batch_ref="first")
+    got = {r["doc_id"] for r in R.bm25_search(spark, path, "quick fox", k=5).collect()}
+    assert got == {"d01", "d02"}
+    # the token-less document still counts in the batch's (N, avgdl)
+    meta = spark.read.parquet(f"{path}/_meta").filter(F.col("batch") == 2).first()
+    assert (meta["n_docs"], meta["avgdl"]) == R.corpus_stats(batch) == (3, 17 / 3)
+
+
 def test_batch_topk_matches_per_query_oneshot(docs_df, spark):
     queries = spark.createDataFrame(
         [("q1", "quick brown fox"), ("q2", "regulatory disclosure review"), ("q3", "lazy dog")],
