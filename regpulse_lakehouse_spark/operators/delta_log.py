@@ -48,6 +48,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 from urllib.parse import quote, unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -130,6 +131,27 @@ def _stat_cmp(v):
     return v
 
 
+class Snapshot(NamedTuple):
+    """One replayed table version — everything a reader plans from,
+    with no Spark job: the active ``add`` actions by path, the latest
+    ``metaData``, the remove tombstones, and the latest ``txn`` version
+    per application id (the spec's idempotent-writer record)."""
+
+    version: int
+    files: dict[str, dict]
+    metadata: dict
+    tombstones: dict[str, dict]
+    txns: dict[str, int]
+
+    @property
+    def schema(self) -> T.StructType:
+        return T.StructType.fromJson(json.loads(self.metadata["schemaString"]))
+
+    @property
+    def configuration(self) -> dict[str, str]:
+        return dict(self.metadata.get("configuration") or {})
+
+
 class DeltaLogTable:
     """VersionedParquetTable's method surface over a real Delta log.
 
@@ -160,15 +182,17 @@ class DeltaLogTable:
         self._init_partition_cols = list(partition_columns or [])
         #: parsed actions per committed version (see :meth:`_actions`)
         self._parsed: dict[int, list[dict]] = {}
-        os.makedirs(os.path.join(root, _LOG_DIR), exist_ok=True)
 
     # -- log plumbing --------------------------------------------------------
     def _log_path(self, version: int) -> str:
         return os.path.join(self.root, _LOG_DIR, f"{version:020d}.json")
 
     def _committed_versions(self) -> list[int]:
+        log_dir = os.path.join(self.root, _LOG_DIR)
+        if not os.path.isdir(log_dir):
+            return []  # the first commit creates the log
         out = []
-        for name in os.listdir(os.path.join(self.root, _LOG_DIR)):
+        for name in os.listdir(log_dir):
             stem, ext = os.path.splitext(name)
             if ext == ".json" and stem.isdigit():
                 out.append(int(stem))
@@ -197,13 +221,18 @@ class DeltaLogTable:
         return self.version is not None
 
     def _replay(self, version: int | None = None) -> tuple[dict, dict, dict]:
-        """Replay the log up to ``version`` (inclusive): returns
-        (active add-actions by path, latest metaData, tombstoned
-        remove-actions by path). Remove wins over any earlier add of
+        """(active add-actions by path, latest metaData, tombstoned
+        remove-actions by path) of :meth:`snapshot`."""
+        snap = self.snapshot(version)
+        return snap.files, snap.metadata, snap.tombstones
+
+    def snapshot(self, version: int | None = None) -> Snapshot:
+        """Replay the log up to ``version`` (inclusive; default the
+        latest). Remove wins over any earlier add of
         the same path — the protocol's file-level last-action-wins
         reconciliation; tombstones accumulate (paths are UUID-unique,
         never re-added) and feed checkpoint retention and
-        :meth:`vacuum`.
+        :meth:`vacuum`; the latest ``txn`` per appId wins.
 
         When a parquet CHECKPOINT at version ≤ target exists (see
         :meth:`checkpoint`), replay starts from its state and only the
@@ -231,12 +260,14 @@ class DeltaLogTable:
                     f"reconstructible"
                 )
             versions = [v for v in versions if v <= version]
+        head = versions[-1]
         active: dict[str, dict] = {}
         meta: dict = {}
         tombstones: dict[str, dict] = {}
-        cp = self._latest_checkpoint(versions[-1])
+        txns: dict[str, int] = {}
+        cp = self._latest_checkpoint(head)
         if cp is not None:
-            cp_version, active, meta, tombstones, _proto = cp
+            cp_version, active, meta, tombstones, _proto, txns = cp
             versions = [v for v in versions if v > cp_version]
         for v in versions:
             for action in self._actions(v):
@@ -247,7 +278,9 @@ class DeltaLogTable:
                     tombstones[action["remove"]["path"]] = action["remove"]
                 elif "metaData" in action:
                     meta = action["metaData"]
-        return active, meta, tombstones
+                elif "txn" in action:
+                    txns[action["txn"]["appId"]] = action["txn"]["version"]
+        return Snapshot(head, active, meta, tombstones, txns)
 
     # -- checkpoints ---------------------------------------------------------
     def _checkpoint_path(self, version: int) -> str:
@@ -271,8 +304,8 @@ class DeltaLogTable:
             return 0
 
     def _latest_checkpoint(self, max_version: int):
-        """(version, active, meta, tombstones, protocol) of the newest
-        checkpoint at or below ``max_version``, or None.
+        """(version, active, meta, tombstones, protocol, txns) of the
+        newest checkpoint at or below ``max_version``, or None.
         ``_last_checkpoint`` is the spec's fast pointer; fall back to a
         directory listing so a missing or torn pointer only costs the
         listing, never correctness."""
@@ -301,8 +334,11 @@ class DeltaLogTable:
         meta: dict = {}
         tombstones: dict[str, dict] = {}
         protocol: dict = {}
+        txns: dict[str, int] = {}
         for row in tbl.to_pylist():
-            if row.get("protocol"):
+            if row.get("txn"):
+                txns[row["txn"]["appId"]] = row["txn"]["version"]
+            elif row.get("protocol"):
                 protocol = {
                     k: v2 for k, v2 in row["protocol"].items()
                     if v2 is not None
@@ -326,13 +362,14 @@ class DeltaLogTable:
                         "options": dict(m["format"].get("options") or []),
                     }
                 meta = m
-        return v, active, meta, tombstones, protocol
+        return v, active, meta, tombstones, protocol, txns
 
     def checkpoint(self) -> int:
         """Write the current snapshot state as the spec's parquet
         checkpoint (one row per action: protocol + metaData + every
         active add + every remove tombstone younger than the spec's
-        retention window, as nullable top-level structs) plus the
+        retention window + the latest txn per appId, as nullable
+        top-level structs) plus the
         ``_last_checkpoint`` pointer. Readers of any version ≥ this one
         start here instead of replaying every JSON commit; tombstones
         are retained so checkpoint-seeded readers (incl. VACUUM) still
@@ -344,7 +381,8 @@ class DeltaLogTable:
         v = self.version
         if v is None:
             raise FileNotFoundError(f"no Delta log under {self.root}")
-        active, meta, tombstones = self._replay(v)
+        snap = self.snapshot(v)
+        active, meta, tombstones = snap.files, snap.metadata, snap.tombstones
         add_struct = pa.struct(
             [
                 ("path", pa.string()),
@@ -378,12 +416,17 @@ class DeltaLogTable:
                 ("dataChange", pa.bool_()),
             ]
         )
+        txn_struct = pa.struct(
+            [("appId", pa.string()), ("version", pa.int64()),
+             ("lastUpdated", pa.int64())]
+        )
         schema = pa.schema(
             [
                 ("protocol", proto_struct),
                 ("metaData", meta_struct),
                 ("add", add_struct),
                 ("remove", remove_struct),
+                ("txn", txn_struct),
             ]
         )
 
@@ -436,6 +479,11 @@ class DeltaLogTable:
                      "dataChange": bool(r.get("dataChange", True)),
                  }}
             )
+        rows += [
+            {"protocol": None, "metaData": None, "add": None, "remove": None,
+             "txn": {"appId": app, "version": ver, "lastUpdated": None}}
+            for app, ver in sorted(snap.txns.items())
+        ]
         tmp = self._checkpoint_path(v) + f".{uuid.uuid4().hex}.tmp"
         pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
         os.rename(tmp, self._checkpoint_path(v))
@@ -453,6 +501,7 @@ class DeltaLogTable:
         FileExistsError if a concurrent writer won), unlink the temp.
         A torn temp file is invisible to readers — only the link
         publishes."""
+        os.makedirs(os.path.join(self.root, _LOG_DIR), exist_ok=True)
         tmp = self._log_path(version) + f".{uuid.uuid4().hex}.tmp"
         with open(tmp, "w", encoding="utf-8") as fh:
             for action in actions:
@@ -469,7 +518,7 @@ class DeltaLogTable:
             self.checkpoint()
         return version
 
-    def _meta_action(self, df: DataFrame) -> dict:
+    def _meta_action(self, df: DataFrame, configuration: dict | None = None) -> dict:
         # an overwrite keeps the table's identity and configuration
         # (spec: metaData.id is stable for the table's lifetime, and
         # dropping configuration would silently shed CHECK constraints)
@@ -479,6 +528,7 @@ class DeltaLogTable:
             mid = meta.get("id") or mid
             cfg = dict(meta.get("configuration") or {})
             created = meta.get("createdTime") or created
+        cfg.update(configuration or {})
         return {
             "metaData": {
                 "id": mid,
@@ -540,11 +590,14 @@ class DeltaLogTable:
         rel = os.path.relpath(path, os.path.abspath(self.root))
         return _log_encode_path(rel.replace(os.sep, "/"))
 
-    def _read_files(self, rel_paths: list[str], schema: T.StructType) -> DataFrame:
+    def read_files(self, rel_paths: list[str], schema: T.StructType) -> DataFrame:
         """Read exactly these active files under the log's schema.
         ``basePath`` pins partition discovery to the table root so the
         hive ``col=value`` directories materialize as the partition
-        columns the log schema declares."""
+        columns the log schema declares. Spark lists the given paths
+        on the driver up to
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+        of them; past that it runs one parallel-listing job first."""
         paths = [os.path.join(self.root, _log_decode_path(p)) for p in rel_paths]
         return (
             self.spark.read.schema(schema)
@@ -648,7 +701,7 @@ class DeltaLogTable:
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         if not active:
             return self.spark.createDataFrame([], schema)
-        return self._read_files(sorted(active), schema)
+        return self.read_files(sorted(active), schema)
 
     def version_as_of(self, timestamp_ms: int) -> int:
         """TIMESTAMP AS OF resolution: the newest committed version
@@ -745,22 +798,41 @@ class DeltaLogTable:
             cond = cond & (F.col(col) <= F.lit(hi))
         if not keep:
             return self.spark.createDataFrame([], schema)
-        return self._read_files(keep, schema).filter(cond)
+        return self.read_files(keep, schema).filter(cond)
 
     # -- commits ---------------------------------------------------------------
-    def write(self, df: DataFrame) -> int:
+    def _configured(self, configuration: dict | None, meta: dict | None = None) -> list[dict]:
+        """A metaData action merging ``configuration`` over ``meta``'s
+        (default: the current metaData), or no action when there is
+        nothing to set. Writers pass ``configuration`` to commit table
+        state in the same JSON as their data actions, so the two
+        change atomically."""
+        if not configuration:
+            return [] if meta is None else [{"metaData": meta}]
+        if meta is None:
+            _, meta, _ = self._replay()
+        cfg = {**(meta.get("configuration") or {}), **configuration}
+        return [{"metaData": {**meta, "configuration": cfg}}]
+
+    def write(
+        self, df: DataFrame, configuration: dict | None = None, txns: dict | None = None
+    ) -> int:
         """Full overwrite: remove every active file, add the new ones —
-        one atomic commit, old snapshots stay time-travelable."""
+        one atomic commit, old snapshots stay time-travelable.
+        ``configuration`` entries are merged into metaData's; ``txns``
+        maps appIds to the versions this commit records
+        (:func:`_txn_actions`)."""
         v = 0 if self.version is None else self.version + 1
         old = list(self._replay()[0]) if self.exists() else []
         # partition_columns() validates the constructor spec against an
         # existing table's metaData before any file is staged
         self.partition_columns()
-        actions = [self._meta_action(df)]
+        actions = [self._meta_action(df, configuration)]
         if v == 0:
             actions.insert(
                 0, {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
+        actions += _txn_actions(txns)
         actions += self._stage_files(df, data_change=True)
         actions += self._remove_actions(old)
         actions.append(_commit_info("WRITE"))
@@ -805,12 +877,19 @@ class DeltaLogTable:
         return {"metaData": new_meta}
 
     def append(
-        self, df: DataFrame, max_retries: int = 0, merge_schema: bool = False
+        self,
+        df: DataFrame,
+        max_retries: int = 0,
+        merge_schema: bool = False,
+        configuration: dict | None = None,
+        txns: dict | None = None,
     ) -> int:
         """Blind append: add-only commit, nothing rewritten. The
         df's schema must match the log schema (see
         :meth:`_check_schema`); ``merge_schema=True`` allows additive
         new columns, committing the evolved metaData with the adds.
+        ``configuration`` and ``txns`` commit with the adds, as in
+        :meth:`write`.
 
         ``max_retries`` > 0 opts into the Delta spec's conflict
         resolution for BLIND APPENDS: an add-only commit reads no
@@ -824,20 +903,22 @@ class DeltaLogTable:
         blind — it read the schema — so retries require
         ``merge_schema=False``.)"""
         if not self.exists():
-            return self.write(df)
+            return self.write(df, configuration, txns)
         meta_action = self._check_schema(df, merge_schema)
-        if meta_action is not None and max_retries:
+        meta_actions = self._configured(
+            configuration, meta_action and meta_action["metaData"]
+        )
+        if meta_actions and max_retries:
             raise ValueError(
-                "merge_schema appends read table state and cannot be "
-                "blindly rebased; use max_retries=0"
+                "appends that change metaData read table state and cannot "
+                "be blindly rebased; use max_retries=0"
             )
         read_v = self.version
         v = read_v + 1  # captured BEFORE staging: a racer that
         # publishes this version first makes our commit fail, never
         # silently land on top of a snapshot we didn't read
-        actions = self._stage_files(df, data_change=True)
-        if meta_action is not None:
-            actions.insert(0, meta_action)
+        actions = meta_actions + _txn_actions(txns)
+        actions += self._stage_files(df, data_change=True)
         actions.append(_commit_info("WRITE"))
         for _attempt in range(max_retries + 1):
             try:
@@ -1029,16 +1110,10 @@ class DeltaLogTable:
             return []
         _, meta, _ = self._replay()
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        tagged = self._read_files(candidates, schema).withColumn(
+        tagged = self.read_files(candidates, schema).withColumn(
             "_file", F.input_file_name()
         )
-        probe = match.select(
-            *[F.col(k).alias(f"_m_{k}") for k in on_cols]
-        ).dropDuplicates()
-        cond = None
-        for k in on_cols:
-            c = F.col(k).eqNullSafe(F.col(f"_m_{k}"))
-            cond = c if cond is None else (cond & c)
+        probe, cond = _null_safe_probe(match, on_cols)
         rows = (
             tagged.join(probe, cond, "left_semi")
             .select("_file")
@@ -1079,7 +1154,7 @@ class DeltaLogTable:
         if touched:
             _, meta, _ = self._replay()
             schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-            touched_df = self._read_files(touched, schema)
+            touched_df = self.read_files(touched, schema)
             merged = upsert_latest_wins(touched_df, updates, keys, version_col)
         else:
             # pure insert: nothing to rewrite, append only the new keys
@@ -1133,7 +1208,7 @@ class DeltaLogTable:
         else:
             _, meta, _ = self._replay()
             schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-            survivors = self._read_files(touched, schema).filter(~predicate)
+            survivors = self.read_files(touched, schema).filter(~predicate)
             actions = self._stage_files(survivors, data_change=True)
             actions += self._remove_actions(touched)
             actions.append(_commit_info("DELETE"))
@@ -1146,6 +1221,45 @@ class DeltaLogTable:
                 v = self._reconcile_winners(
                     read_v, removed=touched, any_add_conflicts=True
                 )
+
+    def delete_matching(
+        self,
+        match: DataFrame,
+        on_cols: list[str],
+        configuration=None,
+        txns: dict | None = None,
+    ) -> int:
+        """MERGE INTO t USING match ON on_cols WHEN MATCHED THEN DELETE
+        with MERGE's physical shape: only the files holding a matching
+        key (:meth:`_touched_files`: stats-pruned candidates, then a
+        null-safe semi-join) are rewritten without the matched rows;
+        every other file carries over. ``configuration`` is a dict as
+        in :meth:`write`, or a callable that receives the DataFrame of
+        the rows being deleted and returns that dict (for table state
+        derived from them, such as a running total to decrement).
+        ``txns`` as in :meth:`write`. Always one commit, even when
+        nothing matched."""
+        if not self.exists():
+            raise FileNotFoundError(f"no Delta log under {self.root}")
+        v = self.version + 1
+        touched = self._touched_files(match, on_cols)
+        schema = self.snapshot().schema
+        old = (
+            self.read_files(touched, schema)
+            if touched
+            else self.spark.createDataFrame([], schema)
+        )
+        probe, cond = _null_safe_probe(match, on_cols)
+        if callable(configuration):
+            configuration = configuration(old.join(probe, cond, "left_semi"))
+        actions = []
+        if touched:
+            survivors = old.join(probe, cond, "left_anti")
+            actions += self._stage_files(survivors, data_change=True)
+            actions += self._remove_actions(touched)
+        actions += self._configured(configuration) + _txn_actions(txns)
+        actions.append(_commit_info("DELETE"))
+        return self._commit(v, actions)
 
     def truncate(self) -> int:
         """DELETE FROM t: remove every active file (metadata-only —
@@ -1205,7 +1319,7 @@ class DeltaLogTable:
             for action in self._actions(v):
                 if "add" in action:
                     window_adds.append(action["add"]["path"])
-                elif "commitInfo" in action:
+                elif "commitInfo" in action or "txn" in action:
                     pass
                 else:  # remove / metaData / protocol
                     add_only = False
@@ -1221,7 +1335,7 @@ class DeltaLogTable:
                     *[c for c in empty.columns if c not in keys],
                     F.lit("insert").alias("_change_type"),
                 )
-            added = self._read_files(window_adds, schema)
+            added = self.read_files(window_adds, schema)
             return added.select(
                 *keys,
                 *[c for c in added.columns if c not in keys],
@@ -1348,10 +1462,15 @@ class DeltaLogTable:
         self,
         target_file_bytes: int = 128 * 1024 * 1024,
         sort_cols: list[str] | None = None,
+        configuration: dict | None = None,
+        txns: dict | None = None,
     ) -> int:
         """OPTIMIZE: coalesce the active files toward
         ``target_file_bytes``, committed with ``dataChange: false`` on
-        both sides so CDC/streaming readers know no rows changed."""
+        both sides so CDC/streaming readers know no rows changed. A
+        partitioned table gets one file per partition value from each
+        output task. ``configuration`` and ``txns`` commit with the
+        rewrite, as in :meth:`write`."""
         if not self.exists():
             raise FileNotFoundError(f"no Delta log under {self.root}")
         v = self.version + 1
@@ -1371,6 +1490,7 @@ class DeltaLogTable:
             {"remove": {"path": p, "deletionTimestamp": ts, "dataChange": False}}
             for p in active
         ]
+        actions += self._configured(configuration) + _txn_actions(txns)
         actions.append(_commit_info("OPTIMIZE"))
         return self._commit(v, actions)
 
@@ -1604,6 +1724,19 @@ def _range_rank(
     return F.when(proxy.isNull(), F.lit(0)).otherwise(rank)
 
 
+def _null_safe_probe(match: DataFrame, on_cols: list[str]) -> tuple[DataFrame, Column]:
+    """``match``'s distinct keys renamed ``_m_<col>``, and the
+    null-safe equality joining them to the table's ``on_cols`` (the
+    upsert's window semantics group NULL keys together, so a plain
+    equi-join would miss a null-keyed row)."""
+    probe = match.select(*[F.col(k).alias(f"_m_{k}") for k in on_cols]).dropDuplicates()
+    cond = None
+    for k in on_cols:
+        c = F.col(k).eqNullSafe(F.col(f"_m_{k}"))
+        cond = c if cond is None else (cond & c)
+    return probe, cond
+
+
 def _add_may_match(
     add: dict, on_cols: list[str], b, pcols: list[str], dtypes: dict
 ) -> bool:
@@ -1699,6 +1832,18 @@ def _footer_stats(pf, fields: list[str]) -> dict:
             except TypeError:  # pragma: no cover - mixed footer types
                 pass
     return out
+
+
+def _txn_actions(txns: dict | None) -> list[dict]:
+    """One spec ``txn`` action per (appId, version) in ``txns`` —
+    Delta's record of which application transaction a commit applied,
+    so a retried writer can tell its work already landed (replay keeps
+    the latest version per appId; see :class:`Snapshot`)."""
+    now = _now_ms()
+    return [
+        {"txn": {"appId": app, "version": ver, "lastUpdated": now}}
+        for app, ver in sorted((txns or {}).items())
+    ]
 
 
 def _commit_info(operation: str) -> dict:

@@ -338,6 +338,137 @@ def ivf_pq_topk(
     )
 
 
+# -- commit markers of the IVF-PQ index ------------------------------------
+# Data first, a kind-tagged marker under ``_commits`` last; readers see
+# only marked batches. Compaction and rebuilds stage beside the index
+# and swap it in.
+
+
+def _fs(spark, path: str):
+    """(jvm, fs, Path-class) for ``path`` — all index bookkeeping goes
+    through the Hadoop FileSystem API so file://, hdfs:// and s3a://
+    layouts behave identically (the round-4 layout lesson)."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return jvm, p.getFileSystem(conf), jvm.org.apache.hadoop.fs.Path
+
+
+def _all_committed(spark, path: str) -> dict[int, tuple[str, str]]:
+    """{batch_number: (kind, ref)} from ``{path}/_commits``. Markers
+    carry their KIND ('post' for build/append postings, 'del' for
+    tombstone batches) on the first line — postings and tombstones
+    share one batch-number ordering (the batch-scoped mask needs it)
+    but commit INDEPENDENTLY, so a marker of one kind can never
+    retroactively commit torn data of the other. Markers without a
+    kind line (pre-kind indexes) read as 'post'."""
+    jvm, fs, P = _fs(spark, path)
+    commits = P(f"{path}/_commits")
+    out: dict[int, tuple[str, str]] = {}
+    if fs.exists(commits):
+        for st in fs.listStatus(commits):
+            name = st.getPath().getName()
+            if name.isdigit():
+                stream = fs.open(st.getPath())
+                try:
+                    content = bytes(stream.readAllBytes()).decode()
+                finally:
+                    stream.close()
+                kind, _, ref = content.partition("\n")
+                if not ref and kind not in ("post", "del"):
+                    kind, ref = "post", content
+                out[int(name)] = (kind, ref)
+    return out
+
+
+def committed_batches(spark, path: str, kind: str = "post") -> dict[int, str]:
+    """{batch_number: idempotency_ref} of the committed batches of one
+    KIND (default: postings batches — what search/meta read)."""
+    return {b: ref for b, (k, ref) in _all_committed(spark, path).items() if k == kind}
+
+
+def _commit(spark, path: str, b: int, ref: str, kind: str = "post") -> None:
+    """Marker write is create-temp-then-rename so the marker is either
+    fully present (with its kind + ref) or absent — never an empty
+    file that would silently defeat batch_ref idempotency."""
+    jvm, fs, P = _fs(spark, path)
+    tmp = P(f"{path}/_commits/.{b}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(f"{kind}\n{ref}".encode()))
+    finally:
+        out.close()
+    fs.rename(tmp, P(f"{path}/_commits/{b}"))
+
+
+def historical_refs(spark, path: str) -> set[str]:
+    """Idempotency refs of batches folded away by compaction
+    (``{path}/_refs/<hex(ref)>`` empty markers) — append checks these
+    too, so replays of pre-compaction batches stay no-ops."""
+    jvm, fs, P = _fs(spark, path)
+    refs_dir = P(f"{path}/_refs")
+    out: set[str] = set()
+    if fs.exists(refs_dir):
+        for st in fs.listStatus(refs_dir):
+            try:
+                out.add(bytes.fromhex(st.getPath().getName()).decode())
+            except ValueError:
+                continue
+    return out
+
+
+def _record_historical_ref(spark, path: str, ref: str) -> None:
+    jvm, fs, P = _fs(spark, path)
+    fs.create(P(f"{path}/_refs/{ref.encode().hex()}"), True).close()
+
+
+def _swap_in(spark, tmp: str, path: str) -> None:
+    """Two renames: live → .old, staged → live, delete .old. A reader
+    racing the swap sees old, new, or — in the brief window between the
+    renames — a clear 'no committed batches' error to retry on; it
+    never sees a MIX of old and new batches. On object stores the
+    renames are copies: run rebuild/compact in a maintenance window
+    there."""
+    jvm, fs, P = _fs(spark, path)
+    old = f"{path}.old"
+    if fs.exists(P(old)):
+        fs.delete(P(old), True)
+    if fs.exists(P(path)):
+        fs.rename(P(path), P(old))
+    fs.rename(P(tmp), P(path))
+    fs.delete(P(old), True)
+
+
+def _committed_deletes(spark, path: str, blist: list[int], id_col: str):
+    """(id, _del_max) across committed delete batches, or None. A
+    tombstone only masks postings from EARLIER batches (batch <
+    _del_max) — a document re-appended after its delete survives, the
+    per-segment semantics CDC-driven updates rely on."""
+    jvm, fs, P = _fs(spark, path)
+    # blist is the COMMITTED delete-batch list: empty → no tombstones,
+    # even if a torn (uncommitted) _deletes dir exists on disk
+    if not blist or not fs.exists(P(f"{path}/_deletes")):
+        return None
+    d = spark.read.parquet(f"{path}/_deletes").filter(F.col("batch").isin(blist))
+    return d.groupBy(id_col).agg(F.max("batch").alias("_del_max"))
+
+
+def _mask_deleted(post: DataFrame, dels, id_col: str) -> DataFrame:
+    """Apply the batch-scoped tombstone mask to a postings frame that
+    still carries its ``batch`` column. The join is NOT forced to
+    broadcast: tombstone sets are usually tiny (AQE broadcasts them at
+    runtime) but can grow unbounded between compactions — forcing a
+    broadcast would brick search exactly when a giant CDC purge most
+    needs it."""
+    if dels is None:
+        return post
+    return (
+        post.join(dels, id_col, "left")
+        .filter(F.col("_del_max").isNull() | (F.col("batch") > F.col("_del_max")))
+        .drop("_del_max")
+    )
+
+
 def ivf_pq_build(
     corpus: DataFrame,
     path: str,
@@ -367,8 +498,6 @@ def ivf_pq_build(
     import os
 
     from .vector import _train_quantizer, bounded_sample_matrix, ivf_assign
-
-    from .retrieval import _commit
 
     # ONE sampling job feeds both sample-trained quantizers (r16: the
     # coarse k-means and the PQ codebooks each collected the identical
@@ -414,12 +543,10 @@ def ivf_pq_build(
 
 
 def _ivf_pq_committed(spark, path: str) -> list[int]:
-    """Committed CODE batches (kind 'post'). Markers share the BM25
-    index's kind-tagged format (retrieval._all_committed) so tombstone
+    """Committed CODE batches (kind 'post'). Markers are kind-tagged
+    (_all_committed) so tombstone
     commits can never retroactively commit torn code batches; legacy
     kindless markers from pre-lifecycle builds read as 'post'."""
-    from .retrieval import committed_batches
-
     return sorted(committed_batches(spark, path, "post"))
 
 
@@ -451,7 +578,6 @@ def ivf_pq_append(
 
     import numpy as np
 
-    from .retrieval import _all_committed, _commit, historical_refs
     from .vector import ivf_assign
 
     everything = _all_committed(spark, path)
@@ -497,8 +623,6 @@ def ivf_pq_delete(
     integral widenings cast, anything else rejected loudly), and a
     schema-mismatched legacy ``_deletes`` directs to compaction
     first. Same ``batch_ref`` exactly-once contract as append."""
-    from .retrieval import _all_committed, _commit, historical_refs
-
     everything = _all_committed(spark, path)
     if not any(k == "post" for k, _ in everything.values()):
         raise FileNotFoundError(f"no committed IVF-PQ index under {path}")
@@ -558,17 +682,6 @@ def ivf_pq_compact(spark, path: str) -> int:
     and after (tested). Returns the number of batches folded."""
     import os
     import shutil
-
-    from .retrieval import (
-        _all_committed,
-        _commit,
-        _committed_deletes,
-        _fs,
-        _mask_deleted,
-        _record_historical_ref,
-        _swap_in,
-        historical_refs,
-    )
 
     everything = _all_committed(spark, path)
     committed = {b: ref for b, (k, ref) in everything.items() if k == "post"}
@@ -703,7 +816,6 @@ def ivf_pq_search(
     from pyspark.sql import Window as W
 
     from ..functions.vecmath import cosine_pd_once, pq_adc_score_udf
-    from .retrieval import _all_committed, _committed_deletes, _mask_deleted
     from .vector import _with_probe_cells
 
     with open(os.path.join(path, "_index.json")) as fh:
@@ -781,7 +893,6 @@ def ivf_pq_health(spark, path: str) -> dict:
     import numpy as np
 
     from ..functions.vecmath import cosine_pd
-    from .retrieval import _all_committed, _committed_deletes, _mask_deleted
 
     everything = _all_committed(spark, path)
     post_blist = sorted(b for b, (k, _) in everything.items() if k == "post")

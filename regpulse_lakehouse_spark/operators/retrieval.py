@@ -17,25 +17,36 @@ Spark-first shape, two serving modes:
   aggregation — the per-(doc, term) tf agg and per-term df agg only ever
   see matching postings. Corpus stats (N, avgdl) are one tiny aggregate
   (2 scalar values collected). No index needed.
-- **Persisted index** (``write_bm25_index`` / ``bm25_search``): postings
-  (term, doc_id, tf, dl) hive-partitioned by ``tb = xxhash64(term) %
-  n_buckets``, per-term df in a sibling table with the same layout, and
-  (N, avgdl) in a one-row ``_meta`` table. A query touches at most
-  |query-terms| buckets — directory pruning (PartitionFilters) plus a
-  pushed ``term IN (...)`` scan filter means a 100 TB corpus serves a
-  query from a few postings files, never a full scan. ``dl`` is
-  denormalized onto every posting so query time needs no doc-table
-  join; parquet dictionary-encodes the repeats away.
+- **Persisted index** (``write_bm25_index`` / ``bm25_search``): one
+  Delta table (:class:`~.delta_log.DeltaLogTable`) of posting rows
+  (id, dl, term, tf), partitioned by the term bucket
+  ``tb = crc32(term) % n_buckets``. Every build, append, delete and
+  compaction is exactly one log commit, and the commit carries the
+  index state with its data: ``metaData.configuration`` holds
+  ``n_buckets``, N and Σdl (avgdl = Σdl / N), and one Delta ``txn``
+  action per batch ref records which batches are live. A search
+  therefore plans from the replayed log alone — schema, corpus
+  statistics and the files of the query's buckets — and its only Spark
+  jobs are the scoring query's. df is computed in that query from the
+  scanned postings (one posting per (doc, term), so the count of a
+  term's postings is its df). A query touches at most |query-terms|
+  buckets: the driver keeps only their files, and the ``tb``
+  partition filter plus a pushed ``term IN (...)`` scan filter stay
+  in the plan. ``dl`` is denormalized onto every posting so query time
+  needs no doc-table join; parquet dictionary-encodes the repeats away.
 
 Everything is pure column expressions — no Python stage anywhere.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import zlib
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from .delta_log import DeltaLogTable, Snapshot
 
 #: Characters that separate terms; mirrors functions.text.tokens (lowercased).
 _K1_DEFAULT = 1.2
@@ -168,99 +179,92 @@ def bm25_topk(
                   max_df_ratio=max_df_ratio, min_match=min_match)
 
 
-def _fs(spark, path: str):
-    """(jvm, fs, Path-class) for ``path`` — all index bookkeeping goes
-    through the Hadoop FileSystem API so file://, hdfs:// and s3a://
-    layouts behave identically (the round-4 layout lesson)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p.getFileSystem(conf), jvm.org.apache.hadoop.fs.Path
+# -- persisted index ------------------------------------------------------
+#: ``metaData.configuration`` keys of an index (spec values are strings)
+_N_BUCKETS = "bm25.nBuckets"
+_N_DOCS = "bm25.numDocs"
+_SUM_DL = "bm25.sumDl"
+#: live delete batches (comma-separated numbers), so that
+#: committed_batches lists postings batches only
+_DELETES = "bm25.deleteBatches"
 
 
-def _all_committed(spark, path: str) -> dict[int, tuple[str, str]]:
-    """{batch_number: (kind, ref)} from ``{path}/_commits``. Markers
-    carry their KIND ('post' for build/append postings, 'del' for
-    tombstone batches) on the first line — postings and tombstones
-    share one batch-number ordering (the batch-scoped mask needs it)
-    but commit INDEPENDENTLY, so a marker of one kind can never
-    retroactively commit torn data of the other. Markers without a
-    kind line (pre-kind indexes) read as 'post'."""
-    jvm, fs, P = _fs(spark, path)
-    commits = P(f"{path}/_commits")
-    out: dict[int, tuple[str, str]] = {}
-    if fs.exists(commits):
-        for st in fs.listStatus(commits):
-            name = st.getPath().getName()
-            if name.isdigit():
-                stream = fs.open(st.getPath())
-                try:
-                    content = bytes(stream.readAllBytes()).decode()
-                finally:
-                    stream.close()
-                kind, _, ref = content.partition("\n")
-                if not ref and kind not in ("post", "del"):
-                    kind, ref = "post", content
-                out[int(name)] = (kind, ref)
-    return out
+def _bucket(term: Column, n_buckets: int) -> Column:
+    """The posting's term bucket, as the writer computes it."""
+    return F.pmod(F.crc32(term.cast("binary")), F.lit(n_buckets)).cast("int")
 
 
-def committed_batches(spark, path: str, kind: str = "post") -> dict[int, str]:
-    """{batch_number: idempotency_ref} of the committed batches of one
-    KIND (default: postings batches — what search/meta read)."""
-    return {b: ref for b, (k, ref) in _all_committed(spark, path).items() if k == kind}
+def term_bucket(term: str, n_buckets: int) -> int:
+    """Driver twin of :func:`_bucket` (crc32 of the UTF-8 bytes): a
+    search finds its buckets without running a job."""
+    return zlib.crc32(term.encode("utf-8")) % n_buckets
 
 
-def _commit(spark, path: str, b: int, ref: str, kind: str = "post") -> None:
-    """Marker write is create-temp-then-rename so the marker is either
-    fully present (with its kind + ref) or absent — never an empty
-    file that would silently defeat batch_ref idempotency."""
-    jvm, fs, P = _fs(spark, path)
-    tmp = P(f"{path}/_commits/.{b}.tmp")
-    out = fs.create(tmp, True)
+def _open(spark: SparkSession, path: str) -> tuple[DeltaLogTable, Snapshot | None]:
+    """The index table and its latest snapshot (None before the first
+    commit, e.g. after a torn build)."""
+    tbl = DeltaLogTable(spark, path, partition_columns=["tb"])
     try:
-        out.write(bytearray(f"{kind}\n{ref}".encode()))
-    finally:
-        out.close()
-    fs.rename(tmp, P(f"{path}/_commits/{b}"))
+        return tbl, tbl.snapshot()
+    except FileNotFoundError:
+        return tbl, None
+
+
+def _delete_batches(snap: Snapshot) -> set[int]:
+    return {int(b) for b in snap.configuration.get(_DELETES, "").split(",") if b}
+
+
+def _live_batches(snap: Snapshot | None) -> dict[int, str]:
+    """{batch_number: ref} of the live postings batches. Each batch ref
+    is a ``txn`` appId whose version is the batch number; version 0
+    marks a ref whose batch was folded by a compaction or superseded
+    by a rebuild."""
+    if snap is None:
+        return {}
+    deletes = _delete_batches(snap)
+    return dict(sorted((v, ref) for ref, v in snap.txns.items() if v > 0 and v not in deletes))
+
+
+def committed_batches(spark, path: str) -> dict[int, str]:
+    """{batch_number: idempotency_ref} of the index's live postings
+    batches, read from the log (no Spark job)."""
+    return _live_batches(_open(spark, path)[1])
 
 
 def historical_refs(spark, path: str) -> set[str]:
-    """Idempotency refs of batches folded away by compaction
-    (``{path}/_refs/<hex(ref)>`` empty markers) — append checks these
-    too, so replays of pre-compaction batches stay no-ops."""
-    jvm, fs, P = _fs(spark, path)
-    refs_dir = P(f"{path}/_refs")
-    out: set[str] = set()
-    if fs.exists(refs_dir):
-        for st in fs.listStatus(refs_dir):
-            try:
-                out.add(bytes.fromhex(st.getPath().getName()).decode())
-            except ValueError:
-                continue
-    return out
+    """Idempotency refs of batches folded away by compaction (or
+    superseded by a rebuild) — append and delete check these too, so
+    replays of those batches stay no-ops."""
+    snap = _open(spark, path)[1]
+    return {ref for ref, v in snap.txns.items() if v == 0} if snap else set()
 
 
-def _record_historical_ref(spark, path: str, ref: str) -> None:
-    jvm, fs, P = _fs(spark, path)
-    fs.create(P(f"{path}/_refs/{ref.encode().hex()}"), True).close()
+def _require_index(path: str, snap: Snapshot | None) -> None:
+    if not _live_batches(snap):
+        raise FileNotFoundError(
+            f"no committed batches under {path} — the index is unbuilt or its "
+            "build is torn; build it with write_bm25_index"
+        )
 
 
-def _swap_in(spark, tmp: str, path: str) -> None:
-    """Two renames: live → .old, staged → live, delete .old. A reader
-    racing the swap sees old, new, or — in the brief window between the
-    renames — a clear 'no committed batches' error to retry on; it
-    never sees a MIX of old and new batches. On object stores the
-    renames are copies: run rebuild/compact in a maintenance window
-    there."""
-    jvm, fs, P = _fs(spark, path)
-    old = f"{path}.old"
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if fs.exists(P(path)):
-        fs.rename(P(path), P(old))
-    fs.rename(P(tmp), P(path))
-    fs.delete(P(old), True)
+def _index_batch(
+    docs: DataFrame, text_col: str, id_col: str, n_buckets: int
+) -> tuple[DataFrame, int, int]:
+    """(postings clustered by ``tb``, N, Σdl) of one batch of documents.
+    Token-less documents count in N with dl 0. The batch is evaluated
+    once: the stats agg and the postings write both read these blocks
+    (an append's batch is typically an anti-join against the main
+    table, which would otherwise run twice)."""
+    docs = docs.select(id_col, text_col).localCheckpoint(eager=False)
+    stats = docs.select(
+        F.greatest(F.size(tokens(F.lower(F.col(text_col)))), F.lit(0)).alias("dl")
+    ).agg(F.count("*").alias("n"), F.sum("dl").alias("s")).first()
+    post = (
+        postings(docs, text_col, id_col)
+        .withColumn("tb", _bucket(F.col("term"), n_buckets))
+        .repartition("tb")  # one file per bucket per commit
+    )
+    return post, int(stats["n"]), int(stats["s"] or 0)
 
 
 def write_bm25_index(
@@ -271,25 +275,22 @@ def write_bm25_index(
     n_buckets: int = 64,
     batch_ref: str = "build",
 ) -> None:
-    """Persist the inverted index as COMMITTED BATCHES:
-    ``{path}/postings/batch=N/tb=*`` (term-bucket-partitioned posting
-    rows), ``{path}/df`` (per-term per-batch doc frequency, same
-    layout), ``{path}/_meta`` (one (N, avgdl) row per batch) and
-    ``{path}/_commits/N`` markers written LAST — search reads only
-    committed batches, so a torn build/append is invisible. A REBUILD
-    over an existing index stages beside it and swaps in (_swap_in),
-    so a crashed rebuild leaves the old index serving. The
-    repartition("tb") keeps each bucket dir to one file per batch (the
-    small-files guard)."""
-    spark = docs.sparkSession
-    jvm, fs, P = _fs(spark, path)
-    target = f"{path}.rebuilding" if fs.exists(P(path)) else path
-    if target != path and fs.exists(P(target)):
-        fs.delete(P(target), True)
-    _write_batch(docs, target, text_col, id_col, n_buckets, b=1)
-    _commit(spark, target, 1, batch_ref)
-    if target != path:
-        _swap_in(spark, target, path)
+    """Build the index at ``path`` as one overwrite commit of a Delta
+    table partitioned by ``tb`` (one file per bucket): the postings, the
+    corpus statistics and ``batch_ref`` as live batch 1 land together,
+    so a torn build commits nothing and a REBUILD over a live index
+    leaves readers on the old snapshot until its commit, then the new
+    one — never a mix. A rebuild supersedes every earlier batch: their
+    refs stay known (:func:`historical_refs`), so replaying one is a
+    no-op. An empty ``docs`` commits the schema with no files, and
+    searches over it return no hits."""
+    tbl, snap = _open(docs.sparkSession, path)
+    post, n_docs, sum_dl = _index_batch(docs, text_col, id_col, n_buckets)
+    txns = {ref: 0 for ref in snap.txns} if snap else {}
+    txns[batch_ref] = 1
+    config = {_N_BUCKETS: str(n_buckets), _N_DOCS: str(n_docs), _SUM_DL: str(sum_dl),
+              _DELETES: ""}
+    tbl.write(post, configuration=config, txns=txns)
 
 
 def bm25_index_append(
@@ -300,76 +301,36 @@ def bm25_index_append(
     batch_ref: str | None = None,
 ) -> int:
     """Grow a persisted index by one batch of NEW documents (disjoint
-    ids — upsert is a different operator). Everything in the index is
-    additive, so an append writes O(batch) into its OWN ``batch=N``
-    dirs and rewrites NOTHING: per-batch df rows sum at query time
-    (term doc-frequencies over disjoint doc sets add) and per-batch
-    _meta rows fold into exact global stats via a weighted mean.
-    Search over build+appends is therefore byte-equal to a fresh build
-    over the union — the same incremental contract as
+    ids — upsert is a different operator) in one add-only commit: the
+    batch's postings (one file per bucket it fills), N and Σdl raised
+    by the batch's counts, and the batch's ref. Nothing is rewritten,
+    and since postings and counts are additive, search over
+    build+appends is byte-equal to a fresh build over the union — the
+    same incremental contract as
     streaming/near_dup.PartitionedSignatureStore and
     quantize.ivf_pq_append.
 
     Exactly-once: pass ``batch_ref`` (any stable id — the streaming
     micro-batch id, an ingest ledger key) and a replay of an
-    already-committed ref is a no-op; a replay of a TORN append (dirs
-    written, no marker) reuses the same batch number and overwrites
-    the torn dirs. Returns the batch number (existing one on a no-op
-    replay)."""
-    spark = docs.sparkSession
-    committed = committed_batches(spark, path)
-    if not committed:
-        raise FileNotFoundError(
-            f"no committed index under {path} — build with write_bm25_index "
-            "first (a torn build leaves no committed batches and must be rebuilt)"
-        )
-    if batch_ref is not None:
-        for b, ref in committed.items():
-            if ref == batch_ref:
-                return b
-        if batch_ref in historical_refs(spark, path):
-            return 0  # folded into a compacted batch; replay is a no-op
-    meta = (
-        spark.read.parquet(f"{path}/_meta")
-        .filter(F.col("batch").isin(list(committed)))
-        .first()
+    already-committed ref is a no-op; a TORN append (files staged, no
+    log commit) is invisible, and its replay writes and commits the
+    batch afresh under the same number. Returns the batch number (the
+    existing one on a no-op replay, 0 for a ref folded by compaction).
+    Single writer, like every DeltaLogTable commit here."""
+    tbl, snap = _open(docs.sparkSession, path)
+    _require_index(path, snap)
+    if batch_ref is not None and batch_ref in snap.txns:
+        return snap.txns[batch_ref]
+    cfg = snap.configuration
+    b = max(snap.txns.values()) + 1
+    post, n_docs, sum_dl = _index_batch(docs, text_col, id_col, int(cfg[_N_BUCKETS]))
+    tbl.append(
+        post,
+        configuration={_N_DOCS: str(int(cfg[_N_DOCS]) + n_docs),
+                       _SUM_DL: str(int(cfg[_SUM_DL]) + sum_dl)},
+        txns={batch_ref if batch_ref is not None else f"append-{b}": b},
     )
-    # next number comes from the SHARED ordering (postings + tombstone
-    # batches) so kinds never collide on a batch number
-    b = max(_all_committed(spark, path), default=0) + 1
-    _write_batch(docs, path, text_col, id_col, int(meta["n_buckets"]), b=b)
-    _commit(spark, path, b, batch_ref if batch_ref is not None else f"append-{b}")
     return b
-
-
-def _committed_deletes(spark, path: str, blist: list[int], id_col: str):
-    """(id, _del_max) across committed delete batches, or None. A
-    tombstone only masks postings from EARLIER batches (batch <
-    _del_max) — a document re-appended after its delete survives, the
-    per-segment semantics CDC-driven updates rely on."""
-    jvm, fs, P = _fs(spark, path)
-    # blist is the COMMITTED delete-batch list: empty → no tombstones,
-    # even if a torn (uncommitted) _deletes dir exists on disk
-    if not blist or not fs.exists(P(f"{path}/_deletes")):
-        return None
-    d = spark.read.parquet(f"{path}/_deletes").filter(F.col("batch").isin(blist))
-    return d.groupBy(id_col).agg(F.max("batch").alias("_del_max"))
-
-
-def _mask_deleted(post: DataFrame, dels, id_col: str) -> DataFrame:
-    """Apply the batch-scoped tombstone mask to a postings frame that
-    still carries its ``batch`` column. The join is NOT forced to
-    broadcast: tombstone sets are usually tiny (AQE broadcasts them at
-    runtime) but can grow unbounded between compactions — forcing a
-    broadcast would brick search exactly when a giant CDC purge most
-    needs it."""
-    if dels is None:
-        return post
-    return (
-        post.join(dels, id_col, "left")
-        .filter(F.col("_del_max").isNull() | (F.col("batch") > F.col("_del_max")))
-        .drop("_del_max")
-    )
 
 
 def bm25_index_delete(
@@ -379,31 +340,25 @@ def bm25_index_delete(
     id_col: str = "doc_id",
     batch_ref: str | None = None,
 ) -> int:
-    """Delete documents from the index WITHOUT touching posting files —
-    the Lucene model: a committed tombstone batch
-    (``{path}/_deletes/batch=N``) masks the ids at search time, and the
-    next ``bm25_index_compact`` purges their postings physically and
-    renormalizes the stats. Until that compaction, deleted docs still
-    count in N/avgdl/df (exactly Lucene's deleted-docs-affect-stats
-    behavior). ``ids`` is a list or a 1-column DataFrame; either way
-    the tombstone column is written with the POSTINGS' id type (a
-    hardcoded string tombstone against bigint doc ids would make the
-    mask join coerce both sides to double — ids above 2^53 could
-    mis-mask, and the _deletes table would disagree with the index
-    schema); a DataFrame whose id type disagrees is rejected loudly.
-    Same ``batch_ref`` exactly-once contract as append. Tombstone batches
-    commit under their own kind ('del') so a delete marker can never
-    retroactively commit a torn append's postings (or vice versa);
-    batch numbers still come from the shared ordering the mask
-    compares against."""
-    everything = _all_committed(spark, path)
-    if not committed_batches(spark, path):
-        raise FileNotFoundError(f"no committed index under {path}")
-    if batch_ref is not None:
-        del_refs = {ref for k, ref in everything.values() if k == "del"}
-        if batch_ref in del_refs or batch_ref in historical_refs(spark, path):
-            return 0
-    id_type = spark.read.parquet(f"{path}/postings").schema[id_col].dataType
+    """Delete documents from the index physically, in one commit: the
+    files holding their postings (stats-pruned on the id column, then a
+    semi-join, as MERGE prunes) are rewritten without them, and the
+    same commit lowers N and Σdl by the deleted documents. Scores right
+    after a delete therefore equal a fresh build over the survivors. A
+    deleted token-less document has no postings, so nothing tells the
+    index it was there: it stays counted in N (with dl 0) until a
+    rebuild. ``ids`` is a list or a 1-column DataFrame; either way the
+    match uses the POSTINGS' id type (an int-vs-long or
+    string-vs-numeric join would coerce both sides and could mis-match
+    large ids); a DataFrame whose id type disagrees is rejected loudly
+    unless the cast is a lossless integral widening. Same ``batch_ref``
+    exactly-once contract as append (a replay returns 0). Returns the
+    delete's batch number, taken from the same ordering as appends."""
+    tbl, snap = _open(spark, path)
+    _require_index(path, snap)
+    if batch_ref is not None and batch_ref in snap.txns:
+        return 0
+    id_type = snap.schema[id_col].dataType
     if isinstance(ids, list):
         from pyspark.sql import types as T
 
@@ -412,7 +367,7 @@ def bm25_index_delete(
         )
     elif ids.schema[id_col].dataType != id_type:
         # lossless integral widening (byte→short→int→long) is safe to
-        # cast up-front; everything else could mis-mask (e.g. a
+        # cast up-front; everything else could mis-match (e.g. a
         # long-vs-int join coerces both sides, and string-vs-numeric
         # would silently match nothing)
         _widen = {"tinyint": 1, "smallint": 2, "int": 3, "bigint": 4}
@@ -424,32 +379,25 @@ def bm25_index_delete(
             raise TypeError(
                 f"ids.{id_col} is {got} but the "
                 f"index postings store {want} — pass matching ids "
-                "(an implicit coercion could mis-mask large numeric ids)"
+                "(an implicit coercion could mis-match large numeric ids)"
             )
-    # Pre-typed-tombstone indexes hold string delete batches; mixing a
-    # differently-typed new batch under _deletes would leave
-    # schema-inconsistent parquet that the single read in
-    # _committed_deletes can mis-read. Detect and direct to compaction
-    # (which purges _deletes entirely).
-    existing_del = sorted(b for b, (k, _) in everything.items() if k == "del")
-    if existing_del:
-        prev_type = (
-            spark.read.parquet(f"{path}/_deletes/batch={existing_del[-1]}")
-            .schema[id_col]
-            .dataType
-        )
-        if prev_type != id_type:
-            raise ValueError(
-                f"existing tombstone batches store {id_col} as "
-                f"{prev_type.simpleString()} but this index's postings are "
-                f"{id_type.simpleString()} — run bm25_index_compact(spark, path) "
-                "first to purge the old-format tombstones, then retry the delete"
-            )
-    b = max(everything) + 1
-    ids.select(id_col).distinct().coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/_deletes/batch={b}"
+    cfg = snap.configuration
+    b = max(snap.txns.values()) + 1
+
+    def lowered_stats(deleted: DataFrame) -> dict:
+        row = deleted.select(id_col, "dl").distinct().agg(
+            F.count("*").alias("n"), F.sum("dl").alias("s")
+        ).first()
+        return {
+            _N_DOCS: str(int(cfg[_N_DOCS]) - int(row["n"])),
+            _SUM_DL: str(int(cfg[_SUM_DL]) - int(row["s"] or 0)),
+            _DELETES: ",".join(str(d) for d in sorted(_delete_batches(snap) | {b})),
+        }
+
+    tbl.delete_matching(
+        ids.select(id_col), [id_col], configuration=lowered_stats,
+        txns={batch_ref if batch_ref is not None else f"delete-{b}": b},
     )
-    _commit(spark, path, b, batch_ref if batch_ref is not None else f"delete-{b}", kind="del")
     return b
 
 
@@ -463,13 +411,12 @@ def apply_changes_to_bm25_index(
     """Route a keyed change feed (upsert.snapshot_changes /
     VersionedParquetTable.changes: _change_type ∈ insert /
     update_postimage / delete) into the index: deletes AND updates
-    tombstone the old ids first, then inserts AND updates append the
-    new text — the append batch outnumbers the tombstone batch, so the
-    batch-scoped mask hides only the OLD postings of an updated doc.
-    With ``batch_ref`` both legs are exactly-once (refs ``{ref}-del`` /
-    ``{ref}-add``); a crash between them replays safely. This is the
-    incremental bridge from the versioned table to the search index —
-    O(changes), never a rebuild."""
+    delete the old ids' postings first, then inserts AND updates
+    append the new text, so an updated doc keeps only its NEW
+    postings. With ``batch_ref`` both legs are exactly-once (refs
+    ``{ref}-del`` / ``{ref}-add``); a crash between them replays
+    safely. This is the incremental bridge from the versioned table to
+    the search index — O(changes), never a rebuild."""
     spark = changes.sparkSession
     # the feed is a full-outer snapshot diff — pin it once instead of
     # re-running it for each isEmpty probe + each leg's write
@@ -493,117 +440,29 @@ def apply_changes_to_bm25_index(
 
 
 def bm25_index_compact(spark: SparkSession, path: str) -> int:
-    """Fold all committed batches into ONE (the lifecycle's third verb:
-    build → append* → compact when per-query df/meta fan-out or
-    bucket-dir file counts grow into the thousands). Needs no document
-    text: postings rows just move, per-term df rows sum, meta rows fold
-    — the same additivity search exploits per query, applied once at
-    rest. Tombstoned documents (bm25_index_delete) are purged
-    physically here and the stats renormalized from the surviving
-    postings (so post-compaction scores equal a fresh build over the
-    survivors; the only shift is that token-LESS documents leave no
-    postings and drop out of N — they can never match a query). The
-    compacted index is written beside the live one and
-    swapped in (_swap_in — a racing reader sees old, new, or a clear
-    retryable error in the brief rename window, never a MIX); the
-    folded batches' idempotency refs are preserved in ``_refs`` so
-    at-least-once replays of pre-compaction batches stay no-ops.
-    Without tombstones, committed search results are byte-identical
-    before and after (tested). Returns the number of batches folded."""
-    everything = _all_committed(spark, path)
-    committed = {b: ref for b, (k, ref) in everything.items() if k == "post"}
-    del_blist = [b for b, (k, _) in everything.items() if k == "del"]
-    if len(committed) <= 1 and not del_blist:
-        return len(committed)
-    blist = list(committed)
-    tmp = f"{path}.compacting"
-    jvm, fs, P = _fs(spark, path)
-    if fs.exists(P(tmp)):
-        fs.delete(P(tmp), True)
-    post = spark.read.parquet(f"{path}/postings").filter(F.col("batch").isin(blist))
-    id_col = [c for c in post.columns if c not in ("dl", "term", "tf", "tb", "batch")][0]
-    dels = _committed_deletes(spark, path, del_blist, id_col)
-    post = _mask_deleted(post, dels, id_col).drop("batch")
-    if dels is not None:
-        # purge path reads the frame three times (postings + df +
-        # stats) — pin it once; the fold path consumes it exactly once
-        # and needs no pin
-        post = post.localCheckpoint()
-    _write_buckets(post, f"{tmp}/postings/batch=1")
-    meta = spark.read.parquet(f"{path}/_meta").filter(F.col("batch").isin(blist)).collect()
-    if dels is None:
-        # pure fold: exact, including token-less documents
-        _write_buckets(
-            spark.read.parquet(f"{path}/df")
-            .filter(F.col("batch").isin(blist))
-            .groupBy("tb", "term")
-            .agg(F.sum("df").alias("df")),
-            f"{tmp}/df/batch=1",
-        )
-        n_total = sum(int(r["n_docs"]) for r in meta)
-        avgdl = (
-            sum(int(r["n_docs"]) * float(r["avgdl"]) for r in meta) / n_total
-            if n_total
-            else 0.0
-        )
-    else:
-        # purge path: recompute df and stats from surviving postings
-        _write_buckets(
-            post.groupBy("tb", "term").agg(F.count_distinct(id_col).alias("df")),
-            f"{tmp}/df/batch=1",
-        )
-        stats = post.select(id_col, "dl").distinct().agg(
-            F.count("*").alias("n"), F.avg("dl").alias("a")
-        ).first()
-        n_total = int(stats["n"])
-        avgdl = float(stats["a"] or 0.0)
-    spark.createDataFrame(
-        [(n_total, avgdl, int(meta[0]["n_buckets"]))],
-        "n_docs long, avgdl double, n_buckets int",
-    ).coalesce(1).write.parquet(f"{tmp}/_meta/batch=1")
-    _commit(spark, tmp, 1, f"compact-{len(blist)}")
-    # preserve every folded ref — BOTH kinds — and refs from earlier
-    # compactions, so append/delete idempotency survives compaction
-    for ref in {r for _, r in everything.values()} | historical_refs(spark, path):
-        _record_historical_ref(spark, tmp, ref)
-    _swap_in(spark, tmp, path)
-    return len(blist) + len(del_blist)
-
-
-def _write_buckets(frame: DataFrame, dest: str) -> None:
-    """Write ``frame`` under ``dest`` partitioned by ``tb``, one file
-    per bucket dir (the small-files guard). A partitioned write of zero
-    rows leaves only _SUCCESS, and an index whose committed batches
-    hold no file at all cannot infer a schema at search time — so an
-    empty frame instead writes one schema-bearing empty file into an
-    explicit tb=0 leaf, keeping the partition layout of later batches."""
-    frame.repartition("tb").write.mode("overwrite").partitionBy("tb").parquet(dest)
-    jvm, fs, P = _fs(frame.sparkSession, dest)
-    if not fs.globStatus(P(f"{dest}/tb=*")):
-        frame.drop("tb").coalesce(1).write.mode("overwrite").parquet(f"{dest}/tb=0")
-
-
-def _write_batch(
-    docs: DataFrame, path: str, text_col: str, id_col: str, n_buckets: int, b: int
-) -> None:
-    # the batch is evaluated once: the postings below and corpus_stats
-    # both read these blocks (an append's batch is typically an
-    # anti-join against the main table, which would otherwise run twice)
-    docs = docs.select(id_col, text_col).localCheckpoint(eager=False)
-    post = (
-        postings(docs, text_col, id_col)
-        .withColumn("tb", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
-        .localCheckpoint()  # computed once; reused by the postings write AND the df agg
-    )
-    _write_buckets(post, f"{path}/postings/batch={b}")
-    _write_buckets(
-        post.groupBy("tb", "term").agg(F.count_distinct(id_col).alias("df")),
-        f"{path}/df/batch={b}",
-    )
-    n_docs, avgdl = corpus_stats(docs, text_col)
-    docs.sparkSession.createDataFrame(
-        [(n_docs, avgdl, n_buckets)], "n_docs long, avgdl double, n_buckets int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta/batch={b}")
+    """Fold all live batches into ONE (the lifecycle's third verb:
+    build → append* → compact when the per-bucket file count grows):
+    an OPTIMIZE commit that rewrites the index to one file per bucket
+    and renumbers the live batches to batch 1. Deletes already removed
+    their postings and lowered the statistics, so there is nothing to
+    purge and N/Σdl carry over unchanged: search results are
+    byte-identical before and after (tested). The folded refs stay in
+    the log as ``txn`` actions of version 0 (:func:`historical_refs`),
+    so at-least-once replays of pre-compaction batches stay no-ops.
+    Compaction also bounds a search's scan to one file per query
+    bucket: past 32 files Spark spends one extra listing job per
+    search (see DeltaLogTable.read_files). The replaced files stay on
+    disk for time travel until ``DeltaLogTable.vacuum``. Returns the
+    number of batches folded (postings and delete batches)."""
+    tbl, snap = _open(spark, path)
+    live = _live_batches(snap)
+    deletes = _delete_batches(snap) if snap else set()
+    if len(live) <= 1 and not deletes:
+        return len(live)
+    txns = {ref: 0 for ref in snap.txns}
+    txns[f"compact-{len(live)}"] = 1
+    tbl.compact(configuration={_DELETES: ""}, txns=txns)
+    return len(live) + len(deletes)
 
 
 def bm25_search(
@@ -617,66 +476,40 @@ def bm25_search(
     max_df_ratio: float | None = None,
     min_match: int = 1,
 ) -> DataFrame:
-    """Serve BM25 top-k from a persisted index. Reads at most
-    |query-terms| bucket directories (PartitionFilters on ``tb``) with
-    the ``term IN (...)`` predicate pushed into the parquet scan —
-    corpus size never enters the query cost, only posting-list length
-    does. ``max_df_ratio`` is the posting-list-length guard for exactly
-    that residual cost (see _score). Same result contract as
-    ``bm25_topk``."""
+    """Serve BM25 top-k from a persisted index. Planned from the
+    replayed log with no Spark job: schema, N and avgdl come from the
+    snapshot, the query's buckets from :func:`term_bucket`, and the
+    scan reads only the active files of those buckets, with the ``tb``
+    partition filter and the ``term IN (...)`` predicate pushed into
+    the parquet scan — corpus size never enters the query cost, only
+    posting-list length does. ``max_df_ratio`` is the
+    posting-list-length guard for exactly that residual cost (see
+    _score). Every append adds up to one file per bucket, and Spark
+    lists more than 32 scanned files in an extra job, so compact
+    (:func:`bm25_index_compact`) once |query terms| × batches passes
+    that. Same result contract as ``bm25_topk``."""
+    tbl, snap = _open(spark, path)
+    _require_index(path, snap)
+    schema = snap.schema
     terms = query_terms(query)
-    if not terms:
-        return _empty_result(
-            spark, spark.read.parquet(f"{path}/postings").schema[id_col]
-        )
-    # _meta holds one row per COMMITTED build/append batch; fold them
-    # into exact global stats (counts add, avgdl is the doc-count-
-    # weighted mean). Uncommitted (torn) batches are invisible.
-    blist = list(committed_batches(spark, path))
-    if not blist:
-        raise FileNotFoundError(
-            f"no committed batches under {path} — the index is unbuilt, torn, "
-            "or mid-swap (rebuild/compact); retry or rebuild"
-        )
-    meta_rows = (
-        spark.read.parquet(f"{path}/_meta").filter(F.col("batch").isin(blist)).collect()
+    cfg = snap.configuration
+    n_buckets = int(cfg[_N_BUCKETS])
+    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
+    files = sorted(
+        p for p, add in snap.files.items() if int(add["partitionValues"]["tb"]) in buckets
     )
-    n_buckets = int(meta_rows[0]["n_buckets"])
-    n_total = sum(int(r["n_docs"]) for r in meta_rows)
-    avgdl_total = (
-        sum(int(r["n_docs"]) * float(r["avgdl"]) for r in meta_rows) / n_total
-        if n_total
-        else 0.0
-    )
-    # Bucket ids computed with the SAME expression as the writer, on a
-    # |terms|-row local frame — bounded driver work.
-    tb_rows = (
-        spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("tb"))
-        .distinct()
-        .collect()
-    )
-    buckets = [int(r["tb"]) for r in tb_rows]
+    if not files:
+        return _empty_result(spark, schema[id_col])
     post = (
-        spark.read.parquet(f"{path}/postings")
-        .filter(F.col("batch").isin(blist))
+        tbl.read_files(files, schema)
         .filter(F.col("tb").isin(buckets))
         .filter(F.col("term").isin(*terms))
     )
-    # tombstone mask (Lucene-style): deleted docs vanish from results
-    # now, from the stats at the next compaction; batch-scoped so a
-    # re-appended doc survives its earlier delete
-    del_blist = list(committed_batches(spark, path, kind="del"))
-    post = _mask_deleted(post, _committed_deletes(spark, path, del_blist, id_col), id_col)
-    df_tbl = (
-        spark.read.parquet(f"{path}/df")
-        .filter(F.col("batch").isin(blist))
-        .filter(F.col("tb").isin(buckets))
-        .filter(F.col("term").isin(*terms))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))  # per-batch rows sum (disjoint doc sets)
-    )
-    return _score(post, df_tbl, n_total, avgdl_total, id_col, k, k1, b,
+    # one posting per (doc, term): a term's posting count is its df
+    df_tbl = post.groupBy("term").agg(F.count("*").alias("df"))
+    n_docs = int(cfg[_N_DOCS])
+    avgdl = int(cfg[_SUM_DL]) / n_docs if n_docs else 0.0
+    return _score(post, df_tbl, n_docs, avgdl, id_col, k, k1, b,
                   max_df_ratio=max_df_ratio, min_match=min_match)
 
 

@@ -639,7 +639,8 @@ def dd_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # expand: every doc resolves its rep (multi-clique members via the
     # small membership map — AQE-broadcastable — everyone else is their
-    # own rep), then takes the rep's component label
+    # own rep), then takes the rep's component label; a rep outside the
+    # pair graph labels its whole clique with itself
     base = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
     rep_of = members.select(
         F.col("doc_id").alias("_mid"), F.col("_rep").alias("_mrep")
@@ -655,7 +656,7 @@ def dd_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return labeled.select(
         "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id"))
+        F.coalesce(F.col("component"), F.col("_r"))
         .cast("long")
         .alias("component"),
     )

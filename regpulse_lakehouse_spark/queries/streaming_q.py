@@ -143,6 +143,7 @@ def st_interval_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch of StreamingSymmetricHashJoinExec + 4 state-store
     commits)."""
 
+    import os
     import tempfile
 
     from ..streaming.windows import interval_stream_join
@@ -172,7 +173,12 @@ def st_interval_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.partitionBy("side")
         .parquet(f"{root}/in")
     )
-    slice_schema = f"user_id {dict(ev.dtypes)['user_id']}, ts timestamp"
+    # a side with no events writes no directory; its stream then reads
+    # an empty one instead of failing to start
+    for side in ("l", "r"):
+        os.makedirs(f"{root}/in/side={side}", exist_ok=True)
+    ts_type = ev.schema["ts"].dataType.simpleString()
+    slice_schema = f"user_id {dict(ev.dtypes)['user_id']}, ts {ts_type}"
     # the streaming stages run on a newSession() clone (shared
     # SparkContext + table cache, isolated SQLConf) so the 4-partition
     # state-store sizing never touches the caller's shuffle conf — the
@@ -222,7 +228,7 @@ def st_interval_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink_schema = (
         "user_id "
         + dict(ev.dtypes)["user_id"]
-        + ", left_ts timestamp, right_ts timestamp"
+        + f", left_ts {ts_type}, right_ts {ts_type}"
     )
     out = spark.read.schema(sink_schema).parquet(f"{root}/out")
     return out.select(

@@ -189,7 +189,7 @@ def stream_changes(
                 # version without re-raising/re-reading
                 os.makedirs(out_dir, exist_ok=True)
                 continue
-            changed = table._read_files(adds, schema0).select(
+            changed = table.read_files(adds, schema0).select(
                 "*", F.lit("insert").alias("_change_type")
             )
             stage = os.path.join(sink_path, f"_stage_{uuid.uuid4().hex}")

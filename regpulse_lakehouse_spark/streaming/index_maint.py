@@ -4,16 +4,16 @@ instead of rebuilding it per refresh.
 
 Same shape as streaming/rollup.maintain_rollup and the ivf_pq_append
 ingest path: ``foreachBatch`` routes each micro-batch of NEW documents
-into ``bm25_index_append``, whose committed-batch layout makes the
+into ``bm25_index_append``, whose one-commit-per-batch log makes the
 whole thing exactly-once — the streaming micro-batch id is the
-append's idempotency ref, so an at-least-once replay of a completed
-batch is a no-op and a replay of a torn batch overwrites the torn
-directories before committing. The first batch builds the index.
+append's idempotency ref (a Delta ``txn`` in the index log), so an
+at-least-once replay of a completed batch is a no-op and a torn batch,
+never committed, is simply written again. The first batch builds the
+index.
 
 100 TB shape: per-batch work is O(batch) — history postings are never
-re-read, never rewritten; searches fold the per-batch df/meta rows at
-query time (bounded by |query terms| × batches; compact with a rebuild
-when the batch count grows into the thousands)."""
+re-read, never rewritten; a search scans one file per query bucket
+per batch (compact with ``bm25_index_compact`` as batches pile up)."""
 
 from __future__ import annotations
 
@@ -76,8 +76,7 @@ def maintain_ivf_pq_index(
     both legs. Quantizers are FROZEN after the first batch — the
     streaming-ingest trade documented on ivf_pq_append: monitor recall
     and rebuild when the embedding distribution drifts."""
-    from ..operators.quantize import ivf_pq_append, ivf_pq_build
-    from ..operators.retrieval import committed_batches
+    from ..operators.quantize import committed_batches, ivf_pq_append, ivf_pq_build
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

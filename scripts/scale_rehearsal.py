@@ -141,7 +141,7 @@ def bm25_rehearsal(spark, root: str, copies: int, iters: int) -> dict:
     import statistics as st
 
     from regpulse_lakehouse_spark.operators.retrieval import (
-        bm25_search, bm25_topk, write_bm25_index,
+        bm25_search, bm25_topk, committed_batches, write_bm25_index,
     )
     from regpulse_lakehouse_spark.sources.tpch import load_table
 
@@ -172,7 +172,7 @@ def bm25_rehearsal(spark, root: str, copies: int, iters: int) -> dict:
     )
     # persisted-index serving path over the scaled corpus
     idx = f"{root}_bm25idx"
-    if not os.path.isdir(os.path.join(idx, "_commits")):
+    if not committed_batches(spark, idx):
         write_bm25_index(load_table(spark, root, "documents"), idx)
     res = bm25_search(spark, idx, scaled_q, k=25)
     t0 = time.perf_counter()

@@ -429,7 +429,30 @@ def test_collapse_bounds_candidates_on_1k_clique(spark):
     assert total == n * (n - 1) // 2  # 499,500 intra-clique pairs
 
 
-def test_rep_level_components_equal_expanded_components(spark):
+def _cluster_components(spark, tmp_path, rows):
+    """``dd_cluster_components`` itself over ``rows`` staged as an sf
+    dir's documents table."""
+    from regpulse_lakehouse_spark.queries.dedup_q import dd_cluster_components
+
+    sf = tmp_path / "sf"
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
+        str(sf / "documents.parquet")
+    )
+    return {(r["doc_id"], r["component"]) for r in dd_cluster_components(spark, str(sf)).collect()}
+
+
+def test_cluster_components_keeps_exact_clique_without_near_dup_partner(spark, tmp_path):
+    """An exact-duplicate clique with no near-dup partner is one
+    component labeled by its min id — not one singleton per member."""
+    clique = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    rows = [(12, clique), (10, clique), (11, clique)]
+    rows += [(20 + i, f"unrelated text number {i} about {i * 7} engines") for i in range(4)]
+    got = dict(_cluster_components(spark, tmp_path, rows))
+    assert got[10] == got[11] == got[12] == 10
+    assert all(got[20 + i] == 20 + i for i in range(4))
+
+
+def test_rep_level_components_equal_expanded_components(spark, tmp_path):
     """The dd_cluster_components r13 wiring: clustering the
     DISTINCT-content (representative) graph and expanding labels
     through the clique membership must produce the exact label set of
@@ -457,26 +480,13 @@ def test_rep_level_components_equal_expanded_components(spark):
         ).collect()
     }
 
-    # rep-level path (the graded row's wiring)
+    # the rep-level graph the production wiring clusters stays tiny
     members, rep_docs = DD.exact_clique_membership(df, "text", "doc_id")
     rep_pairs = DD.minhash_near_dup_pairs(
         rep_docs, threshold=0.4, collapse_exact=False
     ).select("a", "b")
     assert rep_pairs.count() < 20          # vs ~45k expanded pairs
-    rep_comp = connected_components(
-        rep_pairs, nodes=rep_docs.select(F.col("doc_id").alias("id")),
-        src_col="a", dst_col="b", id_col="id",
-    )
-    basedf = df.select(F.col("doc_id").cast("long").alias("doc_id"))
-    rep_of = members.select(F.col("doc_id").alias("_mid"), F.col("_rep").alias("_mrep"))
-    got = {
-        (r["doc_id"], r["component"])
-        for r in basedf.join(rep_of, basedf["doc_id"] == rep_of["_mid"], "left")
-        .withColumn("_r", F.coalesce(F.col("_mrep"), F.col("doc_id")))
-        .join(rep_comp.select(F.col("id").alias("_r"), "component"), "_r", "left")
-        .select("doc_id", F.coalesce("component", "doc_id").cast("long").alias("component"))
-        .collect()
-    }
+    got = _cluster_components(spark, tmp_path, rows)
     assert got == want
     # the clique + its near-dups form ONE component labeled 0
     comp_of = dict(got)

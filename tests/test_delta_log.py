@@ -1027,3 +1027,55 @@ def test_write_op_parses_each_commit_once(spark, tmp_path, monkeypatch):
     logs = [n for n in opened if n.endswith(".json")]
     assert sorted(logs) == [f"{v:020d}.json" for v in range(4)]
     assert _rows(fresh.read()) == [(0, "v0", 0), (1, "v1", 0), (2, "new", 1), (3, "v3", 0)]
+
+
+def test_txn_and_configuration_commit_with_data_and_survive_checkpoints(spark, tmp_path):
+    """Writers commit ``configuration`` entries and ``txn`` actions in
+    the same JSON as their data; replay keeps the latest version per
+    appId, the same from a checkpoint as from the JSON commits."""
+    root = str(tmp_path / "t")
+    t = DeltaLogTable(spark, root, checkpoint_interval=3)
+
+    def frame(i):
+        return spark.createDataFrame([(i,)], "id long").coalesce(1)
+
+    t.write(frame(0), configuration={"app.rows": "1"}, txns={"a": 1})
+    t.append(frame(1), configuration={"app.rows": "2"}, txns={"b": 2})
+    t.append(frame(2), txns={"a": 3})
+    t.compact(txns={"c": 4})  # version 3: checkpointed
+    assert os.path.exists(t._checkpoint_path(3))
+    snap = DeltaLogTable(spark, root).snapshot()
+    assert snap.version == 3
+    assert snap.txns == {"a": 3, "b": 2, "c": 4}
+    assert snap.configuration == {"app.rows": "2"}
+    json_only = DeltaLogTable(spark, root)
+    json_only._latest_checkpoint = lambda mv: None
+    assert json_only.snapshot().txns == snap.txns
+    assert json_only.snapshot().configuration == snap.configuration
+    t.append(frame(3), txns={"b": 5})
+    assert DeltaLogTable(spark, root).snapshot().txns == {"a": 3, "b": 5, "c": 4}
+    assert t.snapshot(version=1).txns == {"a": 1, "b": 2}
+    assert _rows(t.read()) == [(0,), (1,), (2,), (3,)]
+
+
+def test_delete_matching_rewrites_only_touched_files(spark, tmp_path):
+    """MERGE ... WHEN MATCHED THEN DELETE: the file without a matching
+    key carries over by reference, the other is rewritten without the
+    matched rows, and a callable configuration sees exactly the deleted
+    rows — all in one commit."""
+    t = DeltaLogTable(spark, str(tmp_path / "t"))
+    t.write(spark.range(10).coalesce(1))
+    t.append(spark.range(100, 110).coalesce(1))
+    before = {a["path"] for a in t.active_files()}
+    v = t.delete_matching(
+        spark.createDataFrame([(3,), (5,), (999,)], "id long"), ["id"],
+        configuration=lambda deleted: {"app.deleted": str(deleted.count())},
+        txns={"rm": 1},
+    )
+    assert v == t.version == 2
+    assert len(before & {a["path"] for a in t.active_files()}) == 1
+    assert [r[0] for r in _rows(t.read())] == [i for i in range(10) if i not in (3, 5)] + list(
+        range(100, 110)
+    )
+    snap = t.snapshot()
+    assert (snap.configuration, snap.txns) == ({"app.deleted": "2"}, {"rm": 1})

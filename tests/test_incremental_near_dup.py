@@ -237,6 +237,41 @@ def test_bulk_ingest_matches_sequential_ingest(spark, tmp_path):
     assert a == b
 
 
+def test_bulk_ingest_retry_after_crash_equals_clean_run(spark, sf_dir, tmp_path):
+    """A bulk ingest that crashed after its write but before its commit
+    markers leaves uncommitted batch=* directories; the retry must
+    clear them, not append beside them (which doubled their rows)."""
+    import os
+
+    from regpulse_lakehouse_spark.streaming.near_dup import (
+        PartitionedSignatureStore,
+        bulk_ingest_near_dup,
+    )
+
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+    )
+    batch_expr = F.pmod("doc_id", F.lit(3)) + F.lit(1)
+
+    def pairs(store):
+        return sorted(
+            tuple(r) for r in bulk_ingest_near_dup(docs, store, batch_expr, 3, threshold=0.4).collect()
+        )
+
+    def rows(store):
+        return sorted(tuple(r) for r in store.read().select("doc_id", "batch", "band", "bp").collect())
+
+    clean = PartitionedSignatureStore(spark, str(tmp_path / "clean"), n_prefix=2)
+    want = pairs(clean)
+    crashed = PartitionedSignatureStore(spark, str(tmp_path / "crashed"), n_prefix=2)
+    pairs(crashed)
+    for b in crashed._committed():  # crash: data written, no marker
+        os.remove(os.path.join(crashed.root, "_commits", str(b)))
+    assert pairs(crashed) == want and want
+    assert rows(crashed) == rows(clean)
+
+
 def test_bulk_ingest_refuses_nonempty_store(spark, corpus, tmp_path):
     from regpulse_lakehouse_spark.streaming.near_dup import (
         PartitionedSignatureStore,

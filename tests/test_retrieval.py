@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from regpulse_lakehouse_spark.operators import retrieval as R
+from regpulse_lakehouse_spark.operators.delta_log import DeltaLogTable
 
 CORPUS = [
     ("d01", "the quick brown fox jumps over the lazy dog"),
@@ -109,16 +110,66 @@ def test_persisted_search_prunes_buckets_and_pushes_terms(docs_df, spark, tmp_pa
         assert marker not in plan
 
 
-def test_index_layout_one_file_per_bucket(docs_df, tmp_path):
-    import glob
+def test_persisted_search_runs_at_most_four_jobs(spark, tmp_path):
+    """A search plans from the log: no job reads markers, meta or df
+    tables, infers a schema or lists bucket directories, so only the
+    scoring query's jobs run — however many batches the index holds
+    (here a build plus 5 appends, each filling more than 32 of the 64
+    buckets)."""
+    import random
 
+    rng = random.Random(5)
+    vocab = [f"w{i:03d}" for i in range(300)]
+    batches = [
+        [(f"b{n}d{d:02d}", " ".join(rng.choice(vocab) for _ in range(12))) for d in range(20)]
+        for n in range(6)
+    ]
+    schema = "doc_id string, text string"
+    path = str(tmp_path / "jobs")
+    R.write_bm25_index(spark.createDataFrame(batches[0], schema), path, n_buckets=64)
+    for n in range(1, 6):
+        R.bm25_index_append(spark.createDataFrame(batches[n], schema), path, batch_ref=f"b{n}")
+    tbl = DeltaLogTable(spark, path)
+    for v in range(6):
+        assert len({a["add"]["partitionValues"]["tb"] for a in tbl._actions(v) if "add" in a}) > 32
+    query = "w001 w150 w299"
+    sc = spark.sparkContext
+    sc.setJobGroup("bm25-search-jobs", "bm25_search job count")
+    try:
+        rows = R.bm25_search(spark, path, query, k=10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    full = spark.createDataFrame([r for b in batches for r in b], schema)
+    assert rows == R.bm25_topk(full, query, k=10).collect()
+    assert len(sc.statusTracker().getJobIdsForGroup("bm25-search-jobs")) <= 4
+
+
+def test_term_bucket_twin_equals_writer_expression(spark):
+    """The driver's bucket of a term equals the writer's Spark
+    expression, for ASCII, non-ASCII and one-character terms."""
+    terms = ["regulatory", "größe", "東京", "a", "Z", "é", "terms\xa0conditions"]
+    frame = spark.createDataFrame([(t,) for t in terms], "term string")
+    for n in (1, 7, 64):
+        got = frame.select("term", R._bucket(F.col("term"), n).alias("tb")).collect()
+        assert {r["term"]: r["tb"] for r in got} == {t: R.term_bucket(t, n) for t in terms}, n
+
+
+def test_index_layout_one_file_per_bucket(docs_df, spark, tmp_path):
+    """Every commit (build, append, compaction) adds at most one file
+    per tb value, read from the adds' partitionValues in the log."""
     path = str(tmp_path / "bm25_idx3")
     R.write_bm25_index(docs_df, path, n_buckets=4)
-    tb_dirs = glob.glob(f"{path}/postings/batch=*/tb=*")
-    assert tb_dirs, "no bucket dirs written"
-    for tb_dir in tb_dirs:
-        files = [f for f in glob.glob(f"{tb_dir}/*.parquet")]
-        assert len(files) == 1, tb_dir
+    R.bm25_index_append(
+        spark.createDataFrame([("dA", "quick appended fox review")], "doc_id string, text string"),
+        path, batch_ref="a1",
+    )
+    R.bm25_index_compact(spark, path)
+    tbl = DeltaLogTable(spark, path)
+    assert tbl.version == 2  # one commit per verb
+    for v in range(tbl.version + 1):
+        tbs = [a["add"]["partitionValues"]["tb"] for a in tbl._actions(v) if "add" in a]
+        assert tbs, f"version {v} added no files"
+        assert len(tbs) == len(set(tbs)), (v, sorted(tbs))
 
 
 def test_bm25_on_documents_table(spark, sf_dir):
@@ -214,9 +265,10 @@ def test_search_over_empty_build_then_append(spark, tmp_path):
     R.bm25_index_append(batch, path, batch_ref="first")
     got = {r["doc_id"] for r in R.bm25_search(spark, path, "quick fox", k=5).collect()}
     assert got == {"d01", "d02"}
-    # the token-less document still counts in the batch's (N, avgdl)
-    meta = spark.read.parquet(f"{path}/_meta").filter(F.col("batch") == 2).first()
-    assert (meta["n_docs"], meta["avgdl"]) == R.corpus_stats(batch) == (3, 17 / 3)
+    # the token-less document still counts in the logged (N, avgdl)
+    cfg = DeltaLogTable(spark, path).snapshot().configuration
+    n_docs = int(cfg["bm25.numDocs"])
+    assert (n_docs, int(cfg["bm25.sumDl"]) / n_docs) == R.corpus_stats(batch) == (3, 17 / 3)
 
 
 def test_batch_topk_matches_per_query_oneshot(docs_df, spark):
@@ -332,7 +384,7 @@ def test_torn_append_is_invisible_and_replay_heals(spark, tmp_path):
     before = R.bm25_search(spark, path, "quick review", k=10).collect()
 
     R.bm25_index_append(b2, path, batch_ref="ingest-7")
-    os.remove(f"{path}/_commits/2")  # simulate crash before the marker
+    os.remove(f"{path}/_delta_log/{1:020d}.json")  # simulate crash before the commit
     torn = R.bm25_search(spark, path, "quick review", k=10).collect()
     assert torn == before  # uncommitted batch invisible
 
@@ -546,7 +598,7 @@ def test_search_and_append_raise_clearly_on_uncommitted_index(spark, tmp_path):
     R.write_bm25_index(
         spark.createDataFrame(CORPUS[:3], "doc_id string, text string"), path, n_buckets=4
     )
-    os.remove(f"{path}/_commits/1")  # torn: data present, nothing committed
+    os.remove(f"{path}/_delta_log/{0:020d}.json")  # torn: data present, nothing committed
     with pytest.raises(FileNotFoundError, match="committed"):
         R.bm25_search(spark, path, "quick", k=5).collect()
     with pytest.raises(FileNotFoundError, match="committed"):
@@ -556,9 +608,10 @@ def test_search_and_append_raise_clearly_on_uncommitted_index(spark, tmp_path):
 
 
 def test_delete_masks_then_compact_purges(spark, tmp_path):
-    """Tombstone deletes: deleted docs vanish from search immediately
-    (stats stale, Lucene-style); compaction purges them physically and
-    the scores then equal a fresh build over the survivors exactly."""
+    """Deletes remove the docs' postings and their share of the stats
+    in one commit: deleted docs vanish from search immediately, the
+    scores equal a fresh build over the survivors exactly, and stay
+    equal through compaction."""
     path = str(tmp_path / "del")
     full = spark.createDataFrame(CORPUS, "doc_id string, text string")
     R.write_bm25_index(full, path, n_buckets=4)
@@ -570,17 +623,23 @@ def test_delete_masks_then_compact_purges(spark, tmp_path):
     # idempotent replay
     assert R.bm25_index_delete(spark, path, ["d01", "d05"], batch_ref="rm-1") == 0
 
-    folded = R.bm25_index_compact(spark, path)
-    assert folded == 2
     survivors = [r for r in CORPUS if r[0] not in ("d01", "d05")]
     fresh = str(tmp_path / "fresh")
     R.write_bm25_index(
         spark.createDataFrame(survivors, "doc_id string, text string"), fresh, n_buckets=4
     )
-    for q in ("lazy dog", "quick brown fox", "regulatory disclosure"):
-        a = sorted((r["doc_id"], r["bm25"]) for r in R.bm25_search(spark, path, q, k=10).collect())
-        f = sorted((r["doc_id"], r["bm25"]) for r in R.bm25_search(spark, fresh, q, k=10).collect())
-        assert a == f, q
+    queries = ("lazy dog", "quick brown fox", "regulatory disclosure")
+
+    def assert_equals_fresh():
+        for q in queries:
+            a = sorted((r["doc_id"], r["bm25"]) for r in R.bm25_search(spark, path, q, k=10).collect())
+            f = sorted((r["doc_id"], r["bm25"]) for r in R.bm25_search(spark, fresh, q, k=10).collect())
+            assert a == f, q
+
+    assert_equals_fresh()
+    folded = R.bm25_index_compact(spark, path)
+    assert folded == 2
+    assert_equals_fresh()
     # appends still work after a delete+compact cycle
     R.bm25_index_append(
         spark.createDataFrame([("dN", "lazy new entrant")], "doc_id string, text string"),
@@ -628,8 +687,8 @@ def test_cdc_feed_maintains_the_index(spark, tmp_path):
 
 
 def test_delete_marker_cannot_commit_torn_append(spark, tmp_path):
-    """Review fix: kinds commit independently — a tombstone commit
-    must never retroactively commit a torn append's postings."""
+    """A delete commit must never retroactively commit a torn
+    append's postings."""
     import glob
     import os
 
@@ -644,17 +703,25 @@ def test_delete_marker_cannot_commit_torn_append(spark, tmp_path):
     R.bm25_index_append(
         spark.createDataFrame(CORPUS[5:], "doc_id string, text string"), path, batch_ref="a2"
     )
-    os.remove(f"{path}/_commits/2")
-    assert glob.glob(f"{path}/postings/batch=2/*")  # torn data exists
-    # a delete now commits (its own kind, next shared number = 2 or 3)
+    os.remove(f"{path}/_delta_log/{1:020d}.json")
+    live = {os.path.join(path, a["path"]) for a in DeltaLogTable(spark, path).active_files()}
+    assert set(glob.glob(f"{path}/tb=*/*.parquet")) - live  # torn data exists
+    # a delete now commits (taking the torn append's log version)
     R.bm25_index_delete(spark, path, ["d04"], batch_ref="rm")
     got = sorted(
-        (r["doc_id"], r["bm25"])
-        for r in R.bm25_search(spark, path, "quick", k=20).collect()
-        if r["doc_id"] != "d04"
+        (r["doc_id"], r["bm25"]) for r in R.bm25_search(spark, path, "quick", k=20).collect()
     )
-    want = [x for x in before if x[0] != "d04"]
-    assert got == want  # torn batch-2 docs still invisible
+    # torn batch-2 docs still invisible: scores equal a fresh build
+    # over the committed survivors
+    fresh = str(tmp_path / "fresh")
+    R.write_bm25_index(
+        spark.createDataFrame([r for r in CORPUS[:5] if r[0] != "d04"], "doc_id string, text string"),
+        fresh, n_buckets=4,
+    )
+    want = sorted(
+        (r["doc_id"], r["bm25"]) for r in R.bm25_search(spark, fresh, "quick", k=20).collect()
+    )
+    assert got == want and {d for d, _ in got} == {d for d, _ in before} - {"d04"}
 
 
 def test_compact_all_docs_deleted_keeps_index_alive(spark, tmp_path):
@@ -687,13 +754,14 @@ def test_torn_delete_does_not_mask_or_flip_compact_path(spark, tmp_path):
     before = sorted(
         (r["doc_id"], r["bm25"]) for r in R.bm25_search(spark, path, "quick review", k=20).collect()
     )
-    b = R.bm25_index_delete(spark, path, ["d01"], batch_ref="rm1")
-    os.remove(f"{path}/_commits/{b}")  # torn delete: dir on disk, no marker
+    R.bm25_index_delete(spark, path, ["d01"], batch_ref="rm1")
+    v = DeltaLogTable(spark, path).version
+    os.remove(f"{path}/_delta_log/{v:020d}.json")  # torn delete: files on disk, no commit
     # search: nothing masked
     assert sorted(
         (r["doc_id"], r["bm25"]) for r in R.bm25_search(spark, path, "quick review", k=20).collect()
     ) == before
-    # compact: stays on the exact fold path, results byte-identical
+    # compact: results byte-identical
     R.bm25_index_compact(spark, path)
     assert sorted(
         (r["doc_id"], r["bm25"]) for r in R.bm25_search(spark, path, "quick review", k=20).collect()
@@ -730,28 +798,6 @@ def test_delete_widens_lossless_integral_ids(spark, tmp_path):
             spark.range(1).select(F.col("id").alias("doc_id")),  # bigint vs int postings
             batch_ref="rm-long",
         )
-
-
-def test_mixed_tombstone_schema_directs_to_compaction(spark, tmp_path):
-    """ADVICE r7: a pre-typed-tombstone index holds string delete batches;
-    the first typed delete against it must fail with a 'compact first'
-    message instead of leaving mixed parquet schemas under _deletes."""
-    path = str(tmp_path / "mixed")
-    docs = spark.createDataFrame(
-        [(i, t) for i, (_, t) in enumerate(CORPUS[:6])], "doc_id long, text string"
-    )
-    R.write_bm25_index(docs, path, n_buckets=4)
-    # simulate the legacy layout: a committed STRING tombstone batch
-    spark.createDataFrame([("999",)], "doc_id string").coalesce(1).write.parquet(
-        f"{path}/_deletes/batch=2"
-    )
-    R._commit(spark, path, 2, "legacy-del", kind="del")
-    with pytest.raises(ValueError, match="compact"):
-        R.bm25_index_delete(spark, path, [0], batch_ref="rm-typed")
-    # the prescribed remedy: compact purges _deletes, then the delete lands
-    R.bm25_index_compact(spark, path)
-    R.bm25_index_delete(spark, path, [0], batch_ref="rm-typed")
-    assert 0 not in {r["doc_id"] for r in R.bm25_search(spark, path, "the", k=20).collect()}
 
 
 def test_hybrid_fusion_beats_each_single_leg(spark, tmp_path):

@@ -291,3 +291,21 @@ def test_restart_from_checkpoint_recovers_state_and_sink(spark, sf_dir, tmp_path
     # drain before the stop effectively impossible — fail loudly if the
     # machinery ever changes enough that it happens
     assert stopped_early, "query drained before the mid-stream stop; raise the file count"
+
+
+def test_interval_stream_join_runs_without_clicks(spark, tmp_path):
+    """An events table with no clicks writes no ``side=l`` slice; the
+    registry row must still start both streams and return no rows."""
+    import datetime as dt
+
+    from regpulse_lakehouse_spark.queries.streaming_q import st_interval_stream_join
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(i, t0 + dt.timedelta(hours=i), i % 2, "purchase", 1.0, "{}") for i in range(4)]
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+    ).coalesce(1).write.parquet(str(tmp_path / "sf" / "events.parquet"))
+    out = st_interval_stream_join(spark, str(tmp_path / "sf"))
+    assert out.columns == ["user_id", "left_ts_iso", "right_ts_iso"]
+    assert out.collect() == []
